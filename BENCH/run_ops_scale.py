@@ -117,7 +117,7 @@ def main() -> None:
     # ------------------------------------------------------------------
     # 2. simhash near pairs, DEFAULT call (auto split threshold)
     # ------------------------------------------------------------------
-    from lazyosm_spark.operators.dedup import _auto_bucket_threshold, simhash_near_pairs
+    from lazyosm_spark.operators.dedup import AUTO_BUCKET_THRESHOLD, simhash_near_pairs
 
     words = [f"w{i:03d}" for i in range(400)]
     docs = spark.range(N_SIMHASH_DOCS).select(
@@ -143,16 +143,15 @@ def main() -> None:
             ],
         ).alias("text"),
     )
-    auto_thresh = _auto_bucket_threshold(N_SIMHASH_DOCS, 9)
     timed(
         "simhash_near_pairs_default",
         lambda: simhash_near_pairs(docs, max_hamming=8).count(),
         N_SIMHASH_DOCS,
         {
             "max_hamming": 8,
-            "band_combo": 2,
-            "n_blocks": 10,
-            "bucket_threshold": f"auto -> {auto_thresh}",
+            "pigeonhole_blocks": 10,
+            "blocks_per_band": 2,
+            "bucket_threshold": AUTO_BUCKET_THRESHOLD,
             "max_split_depth": 4,
         },
         # two walls per the within-session variance rule (round-4
@@ -399,7 +398,7 @@ def main() -> None:
         {
             "max_hamming": 5,
             "n_bits": 64,
-            "band_combo": 2,
+            "blocks_per_band": 2,
             "cluster_size": 10,
             "sign_bit": "set on even ids",
         },
@@ -478,8 +477,8 @@ Context:
   (equal-size buckets stacked into matrices, xor + LUT popcount —
   ~10^3x the per-collision rate of the former band self-JOIN emit,
   which measured ~6.6M rows/s and owned the old 461 s wall).  The
-  auto threshold (1024, an absolute constant — see
-  `_auto_bucket_threshold`) still bounds any hot bucket via the
+  default threshold (1024, an absolute constant — see
+  `AUTO_BUCKET_THRESHOLD`) still bounds any hot bucket via the
   recursive split; with 12-bit default keys a uniform corpus never
   goes hot, so the default call runs zero band checkpoints.
 - `phash_hamming_knn`'s corpus is near-dup clusters of 10 (<= 4-bit

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lazyosm_spark.cache import free_local_checkpoint, is_local_checkpoint
@@ -102,18 +102,20 @@ def minhash_signatures_from_shingles(
     sh_df: DataFrame, n_hashes: int = DEFAULT_N_HASHES
 ) -> DataFrame:
     """(doc_id, sh array<string>) -> (doc_id, sig_0..sig_{n-1})."""
+    sigs = _signature_cols(n_hashes)
+    return sh_df.select("doc_id", *[c.alias(f"sig_{i}") for i, c in enumerate(sigs)])
+
+
+def _signature_cols(n_hashes: int) -> list[F.Column]:
+    """[sig_0..sig_{n-1}] over the ``sh`` column: sig_i = min over the
+    shingles of md5 seeded by i."""
 
     def hasher(seed: int):
         # NB: a 2-arg lambda would receive the ARRAY INDEX as its second
         # argument from F.transform — use a closure, not default args
         return lambda s: md5_long(s, seed=seed)
 
-    cols = [F.col("doc_id")]
-    for i in range(n_hashes):
-        cols.append(
-            F.array_min(F.transform(F.col("sh"), hasher(i))).alias(f"sig_{i}")
-        )
-    return sh_df.select(*cols)
+    return [F.array_min(F.transform(F.col("sh"), hasher(i))) for i in range(n_hashes)]
 
 
 def minhash_lsh_pairs(
@@ -124,40 +126,39 @@ def minhash_lsh_pairs(
     bands: int = DEFAULT_BANDS,
     ngram: int = 3,
     jaccard_threshold: float = 0.5,
-    verify: str = "exploded",
 ) -> DataFrame:
     """LSH candidate generation + exact verification.
 
     -> (doc_id_a, doc_id_b, jaccard) with a < b, jaccard >= threshold.
     Only pairs sharing >= 1 band bucket are verified — the scalable
-    path (no cross join anywhere).
+    path (no cross join anywhere).  The Jaccard of each candidate pair
+    is counted over EXPLODED (doc, shingle) rows — |A∩B| is a semi-join
+    count per pair, |A∪B| = nA + nB - inter — so no full shingle array
+    is ever shipped through the pair join.
 
-    ``verify``:
-      - 'exploded' (default, the at-scale shape): the Jaccard of each
-        candidate pair is counted over EXPLODED (doc, shingle) rows —
-        |A∩B| is a semi-join count per pair, |A∪B| = nA + nB - inter —
-        so no full shingle array is ever shipped through the pair join
-        (the old shape carried both arrays as wide row payloads twice).
-      - 'array': the original array_intersect/array_union formulation
-        (kept as the cross-check twin; pytest pins both identical).
-    """
+    Cache: one localCheckpoint (shingles + band keys) backs the
+    returned plan; the call leaves nothing in CacheManager and at most
+    that ONE persistent RDD (pytest-pinned)."""
     rows_per_band = n_hashes // bands
-    sh_df = with_shingles(docs, id_col, text_col, ngram).persist()
-    sigs = minhash_signatures_from_shingles(sh_df, n_hashes)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *parts).alias("key"))
+    sigs = _signature_cols(n_hashes)
+    band_keys = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws("_", *sigs[b * rows_per_band : (b + 1) * rows_per_band]).alias("key"),
         )
-    # persist: the bucket table self-joins (a x b) — without this the
-    # signature pipeline (8 md5-min passes over the shingle arrays)
-    # evaluates once per join side
-    buckets = (
-        sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-        .persist()
+        for b in range(bands)
+    ]
+    # one materialization of the shingle arrays AND their band keys:
+    # the verify reads the shingles three times, and the bucket table
+    # self-joins — at broadcast size that is a BroadcastHashJoin, which
+    # reuses no exchange, so a lazy bucket plan would run the 8 md5-min
+    # signature passes once per join side
+    sh_df = (
+        with_shingles(docs, id_col, text_col, ngram)
+        .select("doc_id", "sh", F.array(*band_keys).alias("bk"))
+        .localCheckpoint(eager=True)
     )
+    buckets = sh_df.select("doc_id", F.inline("bk"))
 
     a = buckets.alias("a")
     b = buckets.alias("b")
@@ -170,23 +171,9 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    if verify == "array":
-        return (
-            cand.join(sh_df.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed("sh", "sh_a"), "doc_id_a")
-            .join(sh_df.withColumnRenamed("doc_id", "doc_id_b").withColumnRenamed("sh", "sh_b"), "doc_id_b")
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-            )
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("doc_id_a", "doc_id_b", "jaccard")
-        )
-
-    # exploded verify: shingles are already distinct per doc, so the
-    # per-pair match count IS |A∩B|; jaccard = inter/(nA+nB-inter) is
-    # the same int/int division as size(intersect)/size(union) ->
-    # bit-identical doubles
+    # shingles are already distinct per doc, so the per-pair match
+    # count IS |A∩B|; jaccard = inter/(nA+nB-inter) is the same int/int
+    # division as size(intersect)/size(union) -> bit-identical doubles
     sizes = sh_df.select("doc_id", F.size("sh").alias("n_sh"))
     toks = sh_df.select("doc_id", F.explode("sh").alias("tok"))
     cand_tok_a = cand.join(
@@ -225,14 +212,17 @@ def ngram_jaccard_pairs(
     max_rows: int = 100_000,
 ) -> DataFrame:
     """EXACT all-pairs n-gram Jaccard — the verification oracle for the
-    LSH path.  Guarded: refuses to cross-join beyond max_rows."""
+    LSH path.  Guarded: refuses to cross-join beyond max_rows.  One
+    localCheckpoint of the shingles (read by both cross-join sides)
+    backs the returned plan — the call's only persistent RDD; nothing
+    goes to CacheManager (pytest-pinned)."""
     n = docs.count()
     if n > max_rows:
         raise ValueError(
             f"ngram_jaccard_pairs is the small-scale oracle (n={n} > {max_rows}); "
             "use minhash_lsh_pairs at scale"
         )
-    sh = with_shingles(docs, id_col, text_col, ngram).persist()
+    sh = with_shingles(docs, id_col, text_col, ngram).localCheckpoint(eager=True)
     a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
     return (
@@ -248,47 +238,16 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash64_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """JVM-expression SimHash (the slow twin, kept as the formula spec):
-    per-token md5-long hash; each of the 60 bits votes +1/-1; sign of
-    the vote sum sets the bit.  One aggregate() pass per bit — 60 array
-    traversals per row, measured ~10x slower than the numpy version
-    below (same shape as the pre-Arrow shingle pipeline, commit
-    a9fc69d).  simhash64_sql is the DuckDB oracle of the same formula;
-    pytest pins simhash64 == simhash64_expr."""
-    toks = F.split(normalize_text(text_col), " ")
-    hashes = F.transform(toks, lambda t: md5_long(t))
-
-    def voter(bit: int):
-        # closure, NOT default-arg (3-param lambdas break F.aggregate)
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, bit).bitwiseAND(F.lit(1).cast("long")) == 1, 1
-        ).otherwise(-1)
-
-    bit_cols = []
-    for b in range(60):  # md5_long is 60 bits
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), voter(b))
-        bit_cols.append(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    sim = bit_cols[0]
-    for c in bit_cols[1:]:
-        sim = sim + c
-    return docs.select(F.col(id_col).alias("doc_id"), sim.alias("simhash"))
-
-
 def simhash64(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """64-bit (60 used) SimHash — vectorized Arrow path: per batch, hash
     the UNIQUE tokens once (vocab dedup), expand to a (total_tokens, 60)
     bit matrix, and sum the +-1 votes per doc with one
-    np.add.reduceat — no per-bit array traversal (the JVM-expression
-    twin does 60).  Bit-identical to simhash64_expr / simhash64_sql:
-    Spark's split(normalize, ' ') of an empty text yields [''], so the
-    empty-token md5 is deliberately included here too.
+    np.add.reduceat — no per-bit array traversal.  Bit-identical to the
+    DuckDB twin simhash64_sql (pytest-pinned): a split of an empty
+    normalized text yields [''], so the empty-token md5 is deliberately
+    included here too.
     -> (doc_id, simhash)."""
     import hashlib
     import re
@@ -376,22 +335,16 @@ def _extract_bits(h: F.Column, ranges: list[tuple[int, int]]) -> F.Column:
     acc = None
     shift = 0
     for off, w in ranges:
-        # w == 64 (n_bits=64, n_blocks=1): (1 << 64) - 1 does not fit a
-        # JVM long literal; the all-ones mask is -1 in two's complement
-        mask = (1 << w) - 1 if w < 64 else -1
-        part = F.shiftright(h, off).bitwiseAND(F.lit(mask).cast("long"))
+        part = F.shiftright(h, off).bitwiseAND(F.lit((1 << w) - 1).cast("long"))
         term = part * F.lit(1 << shift).cast("long") if shift else part
         acc = term if acc is None else acc + term
         shift += w
     return acc
 
 
-def _partition_ranges(
-    ranges: list[tuple[int, int]], n_parts: int
-) -> list[list[tuple[int, int]]]:
-    """Partition a set of disjoint bit ranges into n_parts disjoint
-    groups of as-even-as-possible total width."""
-    positions = [off + i for off, w in ranges for i in range(w)]
+def _partition_bits(positions: list[int], n_parts: int) -> list[list[tuple[int, int]]]:
+    """Partition sorted bit positions into n_parts disjoint groups of
+    as-even-as-possible width, each as (offset, width) ranges."""
     total = len(positions)
     out: list[list[tuple[int, int]]] = []
     start = 0
@@ -453,9 +406,9 @@ def _bucket_pairs(bands: DataFrame, max_hamming: int) -> DataFrame:
     irreducible identical-hash mega-cluster past the split ladder) is
     processed in TILE x TILE blocks of its pair space instead of one
     O(m^2) allocation.  NB collect_list still materializes each bucket
-    as ONE Arrow row (~16 B/doc) — for true mega-dup corpora use
-    collapse_identical / exact_dedup (documented in
-    simhash_near_pairs), which keep such clusters out of the buckets.
+    as ONE Arrow row (~16 B/doc) — for true mega-dup corpora run
+    exact_dedup first, which keeps identical-text clusters out of the
+    buckets.
 
     Output = exactly the join formulation's survivors
     (doc_id_a < doc_id_b, hamming <= r, pre-distinct multiplicity
@@ -555,85 +508,60 @@ def _bucket_pairs(bands: DataFrame, max_hamming: int) -> DataFrame:
     return g.mapInPandas(emit, "doc_id_a long, doc_id_b long, hamming int")
 
 
+# Default split threshold of the band ladder (_split_bands).  It must
+# be an ABSOLUTE constant, not a multiple of the per-bucket mean: the
+# band self-join emits ~sum(bucket_size^2)/2 pairs, and under uniform
+# hashing every bucket sits near the mean n / 2^w — so any
+# mean-relative threshold leaves the join at ~n^2 / 2^w, quadratic in
+# corpus size (the exact failure the ladder exists to prevent).  A
+# constant t caps the join at ~n*t/2 rows per band — LINEAR in n.  Each
+# split level trades an (r+1)x row explode on the still-hot rows for a
+# ~2^w_child shrink in their bucket sizes (w_child ~ 6 bits at r=8), a
+# net ~7x sum(size^2) reduction per level, so the ladder converges in
+# ~ceil(log_{2^w}(n / (2^w*t))) levels (~3 levels at 10^9 docs).
+# t = 1024 bounds one bucket's self-join to ~5*10^5 pairs (a fraction
+# of a second inside one task) while keeping typical corpora at <= 2
+# split levels; inputs below the threshold never split at all.
 AUTO_BUCKET_THRESHOLD = 1024
-
-
-def _auto_bucket_threshold(n_docs: int, n_blocks: int) -> int:
-    """Split threshold for ``_split_bands`` on the default path.
-
-    The threshold must be an ABSOLUTE constant, not a multiple of the
-    per-bucket mean: the band self-join emits ~sum(bucket_size^2)/2
-    pairs, and under uniform hashing every bucket sits near the mean
-    n / 2^w — so any mean-relative threshold leaves the join at
-    ~n^2 / 2^w, quadratic in corpus size (the exact failure this lever
-    exists to prevent).  A constant t caps the join at ~n*t/2 rows per
-    band — LINEAR in n.  Each split level trades an (r+1)x row explode
-    on the still-hot rows for a ~2^w_child shrink in their bucket
-    sizes (w_child ~ 6 bits at r=8), a net ~7x sum(size^2) reduction
-    per level, so the ladder converges in ~ceil(log_{2^w}(n / (2^w*t)))
-    levels (~3 levels at 10^9 docs).
-
-    t = 1024 bounds one bucket's self-join to ~5*10^5 pairs (a
-    fraction of a second inside one task) while keeping typical
-    corpora at <= 2 split levels; inputs below the threshold never
-    split at all (the flat path is already linear there).  The n_docs/
-    n_blocks arguments are kept so a future derivation can use them —
-    and so callers/tests can see the chosen constant next to the
-    corpus size it was chosen for."""
-    del n_docs, n_blocks
-    return AUTO_BUCKET_THRESHOLD
 
 
 def _split_bands(
     sims: DataFrame,
     max_hamming: int,
-    n_blocks: int,
-    bucket_threshold: int | None,
+    bucket_threshold: int,
     max_split_depth: int = 4,
-    band_combo: int = 1,
     n_bits: int = 60,
 ) -> DataFrame:
     """Band table (doc_id, simhash, spec, key) whose buckets are all
     <= bucket_threshold docs (except soundness/depth fallbacks), built
     by recursively splitting hot buckets — the Manku et al. (WWW'07)
     move that keeps the band self-join from going quadratic when
-    pigeonhole bands are narrow (n_blocks = r+1 over 60 bits is ~6.7
-    bits -> <=128 distinct keys per band).
+    pigeonhole bands are narrow.
 
-    EXACTNESS INVARIANT: a pair with hamming <= r shares >= 1 level-0
-    block (pigeonhole over r+1 disjoint blocks).  Inside a shared hot
-    bucket both docs agree on every key bit of the bucket's path, so
-    their diffs all lie in the REMAINING bits and still number <= r —
-    splitting the bucket's docs over r+1 disjoint sub-blocks of those
-    remaining bits re-applies the pigeonhole, so they share >= 1 child
-    bucket.  Splitting stops (bucket joined as-is) when remaining bits
-    <= r (no sound split exists) or max_split_depth is hit.
+    Level 0 is COMBINATION BANDING: the hash is cut into b = r + 2
+    disjoint blocks and banded on every union of 2 of them, one band
+    per C(b, 2) combination, so each key is ~2*60/b bits wide (~12 bits
+    at r=8).  Recall is exactly 1 by the extended pigeonhole: <= r
+    differing bits dirty <= r of the b disjoint blocks, leaving >= 2
+    clean blocks, and those 2 clean blocks ARE one of the banded
+    unions — the pair agrees on that band's whole key.  Under uniform
+    hashing the band self-join emits ~C(b,2) * n^2 / 2^(2*60/b)
+    candidate pairs (~6x fewer than single-block bands at r=8), so
+    random-hash corpora at 10^6+ never enter the split ladder at all.
 
-    ``band_combo = c > 1`` is COMBINATION BANDING (round-4 verdict item
-    2): level 0 bands on unions of c blocks out of b = r + c, one band
-    per C(b, c) combination, so every key is ~c*60/b bits wide (~12
-    bits at c=2, r=8) instead of ~6.7.  Recall stays 1 by the extended
-    pigeonhole: <= r differing bits dirty <= r of the b = r + c
-    disjoint blocks, leaving >= c clean blocks, and those c clean
-    blocks ARE one of the C(b, c) banded unions — the pair agrees on
-    that band's whole key.  Under uniform hashing the band self-join
-    emits ~C(b,c) * n^2 / 2^(c*60/b) candidate pairs: c=2 cuts the
-    r=8 collision mass ~6x vs c=1 (45/2^12 vs 9/2^6.67) BEFORE any
-    bucket goes hot, so random-hash corpora at 10^6+ never enter the
-    split ladder at all.  The recursive split still applies on top
-    unchanged: a c-block spec just starts with c used ranges.
-    ``n_blocks`` is ignored at level 0 when c > 1 (b = r + c is forced
-    by the guarantee); children always re-split by r + 1."""
+    EXACTNESS INVARIANT of the split: inside a shared hot bucket both
+    docs agree on every key bit of the bucket's path, so their diffs
+    all lie in the REMAINING bits and still number <= r — splitting the
+    bucket's docs over r+1 disjoint sub-blocks of those remaining bits
+    re-applies the pigeonhole, so they share >= 1 child bucket.
+    Splitting stops (bucket joined as-is) when remaining bits <= r (no
+    sound split exists) or max_split_depth is hit."""
+    from itertools import combinations
+
     r = max_hamming
     # spec id -> key-path bit ranges USED so far
     specs: dict[int, list[tuple[int, int]]] = {}
-    if band_combo > 1:
-        from itertools import combinations
-
-        blocks = _simhash_blocks(n_bits, r + band_combo)
-        level0_ranges = [list(c) for c in combinations(blocks, band_combo)]
-    else:
-        level0_ranges = [[rng] for rng in _simhash_blocks(n_bits, n_blocks)]
+    level0_ranges = [list(c) for c in combinations(_simhash_blocks(n_bits, r + 2), 2)]
     level0 = []
     # keys are PACKED LONGS end-to-end (round-5: the old string keys
     # cost ~2x in join hashing/shuffle width, and the old child-key
@@ -649,8 +577,6 @@ def _split_bands(
     bands = sims.select(
         "doc_id", "simhash", F.explode(F.array(*level0)).alias("b")
     ).select("doc_id", "simhash", F.col("b.spec").alias("spec"), F.col("b.key").alias("key"))
-    if bucket_threshold is None:
-        return bands  # flat path: lazy plan, nothing checkpointed
 
     next_spec = len(level0_ranges)
     parts: list[DataFrame] = []
@@ -667,9 +593,9 @@ def _split_bands(
         if (max_row[0] or 0) <= bucket_threshold:
             parts.append(bands)
             break
-        # localCheckpoint per level: truncates the lineage (a per-level
-        # when-chain/UDF plan otherwise compounds into multi-MiB task
-        # binaries).
+        # localCheckpoint per level: truncates the lineage (the
+        # per-level child-key UDF plans otherwise compound into
+        # multi-MiB task binaries).
         # sizes is FORCED to the broadcast side: it is one row per
         # occupied bucket (orders of magnitude below the band table),
         # but after the child-key pandas UDF Catalyst has no stats and
@@ -688,13 +614,7 @@ def _split_bands(
             remaining = sorted(set(range(n_bits)) - used_bits)
             if len(remaining) <= r:
                 continue
-            runs: list[tuple[int, int]] = []
-            for pos in remaining:
-                if runs and runs[-1][0] + runs[-1][1] == pos:
-                    runs[-1] = (runs[-1][0], runs[-1][1] + 1)
-                else:
-                    runs.append((pos, 1))
-            splittable[sid] = _partition_ranges(runs, r + 1)
+            splittable[sid] = _partition_bits(remaining, r + 1)
         if not splittable:
             parts.append(hot)
             break
@@ -704,17 +624,13 @@ def _split_bands(
         # tagged is checkpointed, so this count touches no upstream plan
         if hot_split.count() == 0:
             break
-        # child layout: sid -> [(child spec id, bit ranges), ...]
-        layout: dict[int, list[tuple[int, list[tuple[int, int]]]]] = {}
         for sid, sub_blocks in splittable.items():
-            layout[sid] = []
             for sub in sub_blocks:
                 cid = next_spec
                 next_spec += 1
                 specs[cid] = specs[sid] + sub
                 children.setdefault(sid, []).append(cid)
-                layout[sid].append((cid, sub))
-        bands = _explode_children(hot_split, layout, specs)
+        bands = _explode_children(hot_split, children, specs)
         # only freshly-created child specs are candidates next level
         specs = {cid: specs[cid] for cids in children.values() for cid in cids}
     else:
@@ -736,51 +652,20 @@ def _split_bands(
     return out
 
 
-_JVM_SPLIT_MAX_PARENTS = 16
-
-
 def _explode_children(
     hot: DataFrame,
-    layout: dict[int, list[tuple[int, list[tuple[int, int]]]]],
+    children: dict[int, list[int]],
     specs: dict[int, list[tuple[int, int]]],
 ) -> DataFrame:
-    """Explode each hot band row into its child bands per ``layout``
-    (sid -> [(child spec, bit ranges)]).  Child key =
+    """Explode each hot band row into its child bands per ``children``
+    (sid -> [child spec ids]).  Child key =
     _extract_bits(simhash, specs[cid]) — the FULL key path recomputed
-    from the hash (low bits first), identical under both strategies:
-
-    - <= _JVM_SPLIT_MAX_PARENTS parent specs (every single-block
-      level-0 split, the common case): a JVM when-chain building the
-      child struct array per parent spec — whole-stage codegen, zero
-      Python;
-    - wider levels (combination-banded level 0, depth >= 2): one
-      vectorized pandas UDF — a per-spec JVM when-chain over hundreds
-      of specs compounds into multi-MiB codegen, while the numpy
-      bit-gather stays O(rows x r) with C-speed list materialization
-      (packed int64 keys; the former per-row f-string formatting was
-      the dominant constant of the 10^6-doc wall)."""
-    if len(layout) <= _JVM_SPLIT_MAX_PARENTS:
-        branch = None
-        for sid, kids in layout.items():
-            arr = F.array(
-                *[
-                    F.struct(
-                        F.lit(cid).alias("spec"),
-                        _extract_bits(F.col("simhash"), specs[cid]).alias("key"),
-                    )
-                    for cid, _sub in kids
-                ]
-            )
-            cond = F.col("spec") == sid
-            branch = F.when(cond, arr) if branch is None else branch.when(cond, arr)
-        return hot.select(
-            "doc_id", "simhash", F.explode(branch).alias("c")
-        ).select(
-            "doc_id",
-            "simhash",
-            F.col("c.spec").alias("spec"),
-            F.col("c.key").alias("key"),
-        )
+    from the hash (low bits first) — built by one vectorized pandas
+    UDF: a JVM when-chain over the C(r+2, 2)+ parent specs compounds
+    into multi-MiB codegen, while the numpy bit-gather stays
+    O(rows x r) with C-speed list materialization (packed int64 keys;
+    the former per-row f-string formatting was the dominant constant
+    of the 10^6-doc wall)."""
 
     @F.pandas_udf("array<array<long>>")
     def child_keys(spec_s: pd.Series, sim_s: pd.Series) -> pd.Series:
@@ -790,9 +675,9 @@ def _explode_children(
         for sid in np.unique(spec_v):
             idx = np.flatnonzero(spec_v == sid)
             sub = sim_v[idx]
-            kids = layout[int(sid)]
+            kids = children[int(sid)]
             arr = np.empty((len(idx), len(kids), 2), dtype=np.int64)
-            for j, (cid, _sub_ranges) in enumerate(kids):
+            for j, cid in enumerate(kids):
                 packed = np.zeros(len(sub), dtype=np.uint64)
                 shift = 0
                 for off, w in specs[cid]:
@@ -827,74 +712,37 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 8,
-    n_blocks: int | None = None,
-    bucket_threshold: int | None | str = "auto",
+    bucket_threshold: int = AUTO_BUCKET_THRESHOLD,
     max_split_depth: int = 4,
-    collapse_identical: bool = False,
-    band_combo: int | str = "auto",
 ) -> DataFrame:
-    """EXACT near-dup pairs by SimHash Hamming distance via the standard
-    block-pigeonhole trick: split the 60-bit hash into n_blocks bands;
-    a pair differing in at most max_hamming bits cannot differ in every
-    one of max_hamming+1 disjoint blocks, so it shares at least one
-    exact band -> equi-join per band, verify bit_count, distinct.
+    """EXACT near-dup pairs by SimHash Hamming distance via the block
+    pigeonhole trick: a pair differing in at most max_hamming = r bits
+    cannot dirty every one of r+2 disjoint blocks, so it agrees on at
+    least one banded union of 2 clean blocks (combination banding, see
+    _split_bands) -> bucket per band, verify the Hamming distance in
+    numpy (_bucket_pairs), distinct.  Recall is exactly 1.
 
-    ``n_blocks`` defaults to max_hamming + 1, which makes the
-    pigeonhole guarantee actually hold (recall = 1; the old fixed
-    n_blocks=4 silently missed pairs whose diffs spread across all 4
-    blocks).  Passing a smaller n_blocks explicitly trades recall for
-    fewer/wider bands (recall < 1).
-
-    ``bucket_threshold`` is the at-scale lever: with r+1 blocks over 60
-    bits, band keys are only ~6.7 bits wide (<=128 values), so at
-    corpus scale every bucket holds ~n/128 docs and the band self-join
-    goes quadratic.  A threshold recursively splits any hotter bucket
-    by r+1 disjoint sub-blocks of its UNUSED bits (exact — see
+    ``bucket_threshold`` is the at-scale lever: at corpus scale a band
+    bucket holds ~n/2^12 docs and the band self-join would go
+    quadratic, so any bucket hotter than the threshold is recursively
+    split by r+1 disjoint sub-blocks of its UNUSED bits (exact — see
     _split_bands), multiplying only the hot rows by r+1 per level while
-    dividing their bucket sizes by ~2^(new key width).  The DEFAULT
-    ``"auto"`` uses AUTO_BUCKET_THRESHOLD (1024) — an ABSOLUTE
-    constant, because a mean-relative threshold would never fire under
-    uniform hashing and leave the join quadratic (see
-    _auto_bucket_threshold for the derivation) — so the default call
-    IS the at-scale plan; pass an int to pin it or ``None`` to force
-    single-level bands.
-    ``collapse_identical`` is the duplicate-heavy-corpus lever: web
-    corpora carry clusters of byte-identical docs whose simhashes are
-    EQUAL, and an identical-hash mega-cluster is irreducible by bucket
-    splitting (its unused bits are identical too) — the band machinery
-    would drag the whole cluster through every level.  With the flag
-    on, banding runs over one representative per DISTINCT hash (cost
-    scales with distinct hashes, not docs) and doc-level pairs are
-    re-expanded afterwards: cross-hash pairs by joining members back
-    on each side's hash, intra-hash pairs (hamming 0) by a
-    per-multi-hash self join.  The OUTPUT is identical either way
-    (pytest pins it); note that for a g-doc identical cluster the
-    output itself contains C(g, 2) pairs — at mega-dup scale prefer
-    ``exact_dedup``/``connected_components``, which report groups, not
-    pairs.  Off by default only because the common path's plan is
-    unchanged without it; recall stays 1 on every path; pytest pins
-    all paths equal to brute force and pins the default path splitting
-    a deliberately hot bucket.
-    ``band_combo`` widens the level-0 band keys by COMBINATION BANDING
-    (see _split_bands: band on unions of c blocks out of r + c —
-    recall stays exactly 1 by the extended pigeonhole, the pair set is
-    bit-identical, pytest pins it).  The DEFAULT ``"auto"`` uses c=2
-    on the exact path (keys ~12 bits instead of ~6.7 — ~6x fewer
-    pigeonhole collisions at random-hash scale, so typical corpora
-    never enter the split ladder at all) and c=1 when ``n_blocks`` is
-    pinned explicitly (the legacy recall-tradeoff knob keeps its
-    single-block banding).  Pass an int (1..4) to pin c; c > 1
-    together with an explicit n_blocks is rejected as ambiguous.
+    dividing their bucket sizes by ~2^(new key width).  The default
+    AUTO_BUCKET_THRESHOLD (1024) is an ABSOLUTE constant (see its
+    comment for why), so the default call IS the at-scale plan;
+    ``max_split_depth`` caps the levels (0 = never split).  Pytest pins
+    every setting equal to brute force and pins the default path
+    splitting a deliberately hot bucket.  For corpora dominated by
+    byte-identical clusters run exact_dedup first: an identical-hash
+    cluster cannot be split, and a g-doc cluster alone emits C(g, 2)
+    pairs.
     -> (doc_id_a, doc_id_b, hamming)."""
     return hash_near_pairs(
         simhash64(docs, id_col, text_col),
         max_hamming=max_hamming,
         n_bits=60,
-        n_blocks=n_blocks,
         bucket_threshold=bucket_threshold,
         max_split_depth=max_split_depth,
-        collapse_identical=collapse_identical,
-        band_combo=band_combo,
     )
 
 
@@ -904,11 +752,8 @@ def hash_near_pairs(
     hash_col: str = "simhash",
     max_hamming: int = 8,
     n_bits: int = 60,
-    n_blocks: int | None = None,
-    bucket_threshold: int | None | str = "auto",
+    bucket_threshold: int = AUTO_BUCKET_THRESHOLD,
     max_split_depth: int = 4,
-    collapse_identical: bool = False,
-    band_combo: int | str = "auto",
 ) -> DataFrame:
     """EXACT near pairs by Hamming distance over ANY precomputed long
     hash column — the banding/split/verify engine of simhash_near_pairs
@@ -919,36 +764,18 @@ def hash_near_pairs(
     image dedup.  ``n_bits`` is the hash width the pigeonhole blocks
     partition (60 for the engine's simhash, 64 for a full-width phash;
     the verify xors the full 64-bit value either way, so bit 63 /
-    negative hashes are handled).  All other knobs and the exactness
+    negative hashes are handled).  The other knobs and the exactness
     invariant are simhash_near_pairs' (see its docstring).
     -> (doc_id_a, doc_id_b, hamming) with ids from ``id_col``."""
     if not 1 <= n_bits <= 64:
         raise ValueError(f"n_bits must be in [1, 64], got {n_bits}")
-    if band_combo == "auto":
-        band_combo = 2 if n_blocks is None else 1
-    if not isinstance(band_combo, int) or not 1 <= band_combo <= 4:
+    if not 0 <= max_hamming <= n_bits - 2:
         raise ValueError(
-            f"band_combo must be 'auto' or an int in [1, 4], got {band_combo!r}"
+            f"max_hamming must be in [0, n_bits - 2] (the r + 2 pigeonhole "
+            f"blocks must fit in {n_bits} bits), got {max_hamming}"
         )
-    if band_combo > 1:
-        if n_blocks is not None:
-            raise ValueError(
-                "band_combo > 1 bands on r+combo blocks; do not also pin n_blocks"
-            )
-        if max_hamming + band_combo > n_bits:
-            raise ValueError(
-                f"max_hamming + band_combo must be <= {n_bits}, got {max_hamming + band_combo}"
-            )
-    if n_blocks is None:
-        n_blocks = max_hamming + band_combo
-    if not 1 <= n_blocks <= n_bits:
-        raise ValueError(f"n_blocks must be in [1, {n_bits}], got {n_blocks}")
-    if isinstance(bucket_threshold, str) and bucket_threshold != "auto":
-        raise ValueError(
-            f"bucket_threshold must be an int, None, or 'auto', got {bucket_threshold!r}"
-        )
-    if bucket_threshold == "auto":
-        bucket_threshold = _auto_bucket_threshold(0, n_blocks)  # constant
+    if not isinstance(bucket_threshold, int) or bucket_threshold < 1:
+        raise ValueError(f"bucket_threshold must be a positive int, got {bucket_threshold!r}")
     id_type = hashes.schema[id_col].dataType.simpleString()
     if id_type not in ("bigint", "int", "smallint", "tinyint"):
         # the numpy bucket verify stacks ids as int64 — a string/UUID id
@@ -959,108 +786,17 @@ def hash_near_pairs(
             f"hash_near_pairs needs an integral {id_col!r} (the numpy "
             f"verify stacks ids as int64), got {id_type}"
         )
+    # one materialization backs the hot probe AND the verify read; a
+    # plain persist would be dropped below before the (lazy) verify
+    # executes on the no-split fast path
     sims = hashes.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(hash_col).cast("long").alias("simhash"),
-    )
-    if collapse_identical:
-        return _near_pairs_collapsed(
-            sims, max_hamming, n_blocks, bucket_threshold, max_split_depth,
-            band_combo, n_bits,
-        )
-    if bucket_threshold is not None:
-        # one materialization backs the hot probe AND the verify read;
-        # a plain persist would be dropped below before the (lazy)
-        # verify executes on the no-split fast path
-        sims = sims.localCheckpoint(eager=True)
-    bands = _split_bands(
-        sims, max_hamming, n_blocks, bucket_threshold, max_split_depth,
-        band_combo, n_bits,
-    )
-    if bucket_threshold is not None and is_local_checkpoint(bands):
+    ).localCheckpoint(eager=True)
+    bands = _split_bands(sims, max_hamming, bucket_threshold, max_split_depth, n_bits)
+    if is_local_checkpoint(bands):
         # the ladder split and re-materialized the band table — the
         # simhash checkpoint is superseded; otherwise the lazy band
         # plan still reads it (result-backing, the call's one residue)
         free_local_checkpoint(sims)
     return _bucket_pairs(bands, max_hamming).distinct()
-
-
-def _near_pairs_collapsed(
-    sims: DataFrame,
-    max_hamming: int,
-    n_blocks: int,
-    bucket_threshold: int | None,
-    max_split_depth: int,
-    band_combo: int = 1,
-    n_bits: int = 60,
-) -> DataFrame:
-    """simhash_near_pairs(collapse_identical=True) body: band over one
-    representative per DISTINCT hash, then re-expand to doc pairs.
-
-    Output is identical to the direct path (pytest pins it); cost of
-    the band machinery scales with distinct hashes d instead of docs n
-    — the lever for duplicate-heavy corpora where identical-hash
-    clusters are irreducible by bucket splitting.  The returned plan is
-    backed by TWO checkpoints (the (doc_id, simhash) table and the
-    rep-level pair set) — both are result-backing, not superseded;
-    pytest bounds the call at <= 2 persistent RDDs."""
-    # one narrow materialization backs every downstream read (members
-    # are joined on each side of the expansion)
-    sims_ck = sims.localCheckpoint(eager=True)
-    reps = sims_ck.groupBy("simhash").agg(F.min("doc_id").alias("doc_id"))
-    bands = _split_bands(
-        reps.select("doc_id", "simhash"),
-        max_hamming,
-        n_blocks,
-        bucket_threshold,
-        max_split_depth,
-        band_combo,
-        n_bits,
-    )
-    # rep-level near pairs on rep DOC IDS (numpy bucket verify), then
-    # mapped back to their hashes — two joins against the d-row reps
-    # table, cheap next to the verify itself
-    rp = _bucket_pairs(bands, max_hamming).distinct()
-    ra = reps.select(F.col("doc_id").alias("doc_id_a"), F.col("simhash").alias("ha"))
-    rb = reps.select(F.col("doc_id").alias("doc_id_b"), F.col("simhash").alias("hb"))
-    rep_pairs = (
-        rp.join(ra, "doc_id_a")
-        .join(rb, "doc_id_b")
-        .select("ha", "hb", "hamming")
-        # rep-level pairs are the SMALL set (<= true near-pair hash
-        # pairs); materializing them frees the band checkpoint below
-        .localCheckpoint(eager=True)
-    )
-    free_local_checkpoint(bands)
-    ma = sims_ck.select(F.col("simhash").alias("ha"), F.col("doc_id").alias("da"))
-    mb = sims_ck.select(F.col("simhash").alias("hb"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_pairs.join(ma, "ha")
-        .join(mb, "hb")
-        .select(
-            F.least("da", "db").alias("doc_id_a"),
-            F.greatest("da", "db").alias("doc_id_b"),
-            "hamming",
-        )
-    )
-    multi = (
-        sims_ck.groupBy("simhash")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > 1)
-        .select("simhash")
-    )
-    sm = sims_ck.join(multi, "simhash")
-    x = sm.alias("x")
-    y = sm.alias("y")
-    intra = (
-        x.join(y, "simhash")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_id_a"),
-            F.col("y.doc_id").alias("doc_id_b"),
-            # intra-hash pairs are hamming 0 by construction; cast to
-            # int = bit_count's return type so the union lines up
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)

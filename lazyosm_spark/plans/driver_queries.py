@@ -1293,11 +1293,12 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 12
 """,
 )
 def q_fx_simhash(spark, sf_dir):
-    """simhash_near_pairs is EXACT (pigeonhole n_blocks = max_hamming+1),
-    so the oracle is a plain all-pairs bit_count over the identical
-    simhash values (simhash64_sql twin).  Runs the at-scale shape —
-    recursive hot-bucket splitting (bucket_threshold) — which emits the
-    same exact pairs (pytest-pinned) while bounding band bucket sizes."""
+    """simhash_near_pairs is EXACT (combination banding over
+    max_hamming+2 pigeonhole blocks), so the oracle is a plain
+    all-pairs bit_count over the identical simhash values
+    (simhash64_sql twin).  A low bucket_threshold drives the one engine
+    path through its recursive hot-bucket split, which emits the same
+    exact pairs (pytest-pinned) while bounding band bucket sizes."""
     docs = _t(spark, sf_dir, "documents")
     out = dedup.simhash_near_pairs(
         docs, max_hamming=12, bucket_threshold=16, max_split_depth=2

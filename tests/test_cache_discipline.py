@@ -27,6 +27,12 @@ def _delta(spark, fn) -> int:
     return n_persistent_rdds(spark) - base
 
 
+def _cache_manager_empty(spark) -> bool:
+    """No cached plan CacheManager could substitute into a later,
+    structurally identical call."""
+    return bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
+
+
 def test_grid_knn_no_superseded_cache(spark):
     from lazyosm_spark.operators.knn import grid_knn
 
@@ -79,3 +85,18 @@ def test_simhash_default_path_no_superseded_cache(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     # default call = auto threshold = split path with level checkpoints
     assert _delta(spark, lambda: simhash_near_pairs(docs)) <= 1
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "ngram_jaccard_pairs"])
+def test_shingle_pair_operators_leave_no_cache(spark, op):
+    """Each call leaves nothing in CacheManager (a later identical call
+    must not be served from it) and at most the ONE result-backing
+    shingle checkpoint its docstring declares; a repeat call holds to
+    the same bound."""
+    from lazyosm_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    spark.catalog.clearCache()
+    for _ in range(2):
+        assert _delta(spark, lambda: getattr(dedup, op)(docs)) <= 1
+        assert _cache_manager_empty(spark)

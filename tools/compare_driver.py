@@ -11,6 +11,7 @@ import sys
 import time
 
 import duckdb
+import numpy as np
 import pandas as pd
 
 sys.path.insert(0, "/root/repo")
@@ -28,6 +29,32 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         if df[c].dtype == object:
             df[c] = df[c].astype(str)
     return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """The driver's equality gate on a Spark result and its DuckDB
+    oracle: column names, row count, then order-insensitive values
+    (floats must match exactly).  -> the differences found, empty when
+    the two agree."""
+    a, b = canon(sdf), canon(odf)
+    if list(a.columns) != list(b.columns):
+        return [f"columns {list(a.columns)} vs {list(b.columns)}"]
+    if len(a) != len(b):
+        return [f"rows {len(a)} vs {len(b)}"]
+    diffs = []
+    for c in a.columns:
+        av, bv = a[c], b[c]
+        if av.dtype.kind == "f" or bv.dtype.kind == "f":
+            av = av.astype(float)
+            bv = bv.astype(float)
+            both_nan = av.isna() & bv.isna()
+            if not (np.isclose(av, bv, rtol=0, atol=0, equal_nan=True) | both_nan).all():
+                bad = (~np.isclose(av, bv, equal_nan=True)).idxmax()
+                diffs.append(f"col {c}: first diff row {bad}: {av[bad]!r} vs {bv[bad]!r}")
+        elif not (av.astype(str) == bv.astype(str)).all():
+            bad = (av.astype(str) != bv.astype(str)).idxmax()
+            diffs.append(f"col {c}: first diff row {bad}: {av[bad]!r} vs {bv[bad]!r}")
+    return diffs
 
 
 def main() -> None:
@@ -62,39 +89,13 @@ def main() -> None:
             print(f"FAIL  {name}: duckdb error: {str(ex)[:2000]}")
             n_fail += 1
             continue
-        a, b = canon(sdf), canon(odf)
-        if list(a.columns) != list(b.columns):
-            print(f"FAIL  {name}: columns {list(a.columns)} vs {list(b.columns)}")
+        diffs = compare(sdf, odf)
+        if diffs:
+            print(f"FAIL  {name}: {'; '.join(diffs)}")
             n_fail += 1
-            continue
-        if len(a) != len(b):
-            print(f"FAIL  {name}: rows {len(a)} vs {len(b)}")
-            n_fail += 1
-            continue
-        eq = True
-        for c in a.columns:
-            av, bv = a[c], b[c]
-            if av.dtype.kind == "f" or bv.dtype.kind == "f":
-                import numpy as np
-
-                av = av.astype(float)
-                bv = bv.astype(float)
-                both_nan = av.isna() & bv.isna()
-                if not (np.isclose(av, bv, rtol=0, atol=0, equal_nan=True) | both_nan).all():
-                    bad = (~np.isclose(av, bv, equal_nan=True)).idxmax()
-                    print(f"  col {c}: first diff row {bad}: {av[bad]!r} vs {bv[bad]!r}")
-                    eq = False
-            else:
-                if not (av.astype(str) == bv.astype(str)).all():
-                    bad = (av.astype(str) != bv.astype(str)).idxmax()
-                    print(f"  col {c}: first diff row {bad}: {av[bad]!r} vs {bv[bad]!r}")
-                    eq = False
-        if eq:
-            print(f"PASS  {name}: {len(a)} rows ({time.time()-t0:.1f}s)")
-            n_pass += 1
         else:
-            print(f"FAIL  {name}: value mismatch")
-            n_fail += 1
+            print(f"PASS  {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
+            n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
 
 
