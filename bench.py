@@ -98,6 +98,36 @@ def _task_spread(spark, after_stage: int) -> float:
         return float("nan")
 
 
+def grouped_refine_reference(points, tiles):
+    """The per-tile grouped refine tile_points_shuffle ran before its
+    refine became a map-side Arrow filter: the coarse join carries the
+    ring, then groupBy(tile_id).applyInPandas ray-casts each tile's
+    whole candidate set in one pandas frame, so ONE task owns a hot
+    tile.  The skew section's reference plan (same memberships)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from lazyosm_spark.functions.cells import cell_encode
+    from lazyosm_spark.functions.geometry import pip_mask
+    from lazyosm_spark.operators.spatial_join import _open_ring
+
+    def refine(pdf):
+        xy = pdf[["lon", "lat"]].to_numpy(np.float64)
+        inside = pip_mask(_open_ring(pdf["ring"].iloc[0]), xy)
+        return pdf.loc[inside, ["point_id", "tile_id", "resolution"]]
+
+    res_list = sorted(int(r[0]) for r in tiles.select("resolution").distinct().collect())
+    cells = points.select(
+        F.col("point_id").cast("string").alias("point_id"), "lon", "lat",
+        F.explode(F.array(*[cell_encode(F.col("lon"), F.col("lat"), r) for r in res_list]))
+        .alias("cell"),
+    )
+    keys = tiles.select(F.col("tile_id").alias("cell"), "tile_id", "resolution", "ring")
+    return cells.join(keys, "cell").groupBy("tile_id").applyInPandas(
+        refine, "point_id string, tile_id long, resolution int"
+    )
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -225,13 +255,14 @@ def main() -> None:
     # q7: cosine top-k over embeddings
     timed("cosine_topk", lambda: dq.QUERIES["cosine_topk"](spark, SF_DIR).count())
 
-    # q8: SKEW world — one hot "city-center" tile (SURVEY §4: salting
-    # is the engine's answer to the reference's LRU-thrash Limit).
-    # ~35% of all points remap into the coarsest tile's cell, so the
-    # unsalted shuffle refine hands one task ~35% of the PIP work;
-    # salt=16 splits that tile's batch across 16 tasks.  Reported:
-    # wall time both ways + max/median task-time spread of the refine
-    # stage (UI REST taskSummary) + the salted speedup.
+    # q8: SKEW world — one hot "city-center" tile (SURVEY §4: the
+    # engine's answer to the reference's LRU-thrash Limit).  ~35% of all
+    # points remap into the coarsest tile's cell.  The reference plan
+    # (grouped_refine_reference) hands one task that tile's whole PIP
+    # work; tile_points_shuffle refines map-side, so the hot tile's rows
+    # stay spread over the join's tasks.  Reported: wall time of both +
+    # max/median task-time spread of the heaviest stage (UI REST
+    # taskSummary) + the shipping call's speedup.
     from lazyosm_spark.operators.spatial_join import tile_points_shuffle
 
     tiles_pdf = gen_tiles()
@@ -267,29 +298,32 @@ def main() -> None:
             F.lit(lat0 + 0.02 * dlat)
             + (i * phi2 - F.floor(i * phi2)) * (0.96 * dlat),
         ).otherwise(F.col("lat")).alias("lat"),
-    ).persist()
+    ).repartition(spark.sparkContext.defaultParallelism).persist()
+    # balanced input partitions, as at scale: lineitem here is one row
+    # group, so without the repartition one scan task holds every point
+    # and a map-side plan's task spread measures that, not the hot tile
     pts_skew.count()  # materialize outside the timed windows
 
-    def skew_run(salt):
+    def skew_run(join):
         done = _completed_stages(spark)
         marker = max((s["stageId"] for s in done), default=-1)
         t0 = time.time()
-        n = tile_points_shuffle(pts_skew, tiles, salt=salt).count()
+        n = join(pts_skew, tiles).count()
         dt = time.time() - t0
         return n, dt, _task_spread(spark, marker)
 
     # AQE partition coalescing off for this section only: at sf0.1 the
-    # refine shuffle is a few MB, so AQE merges it to ~7 tasks and the
-    # hot tile hides inside a merged task.  At 100 TB partitions are
-    # ~128 MB each and never coalesce away — and AQE's skew handling
-    # cannot split a GROUP (all rows of one tile must meet in one
-    # task), which is exactly why the salt exists.  Wall times and
-    # spreads below therefore reflect the many-partition regime.
-    # 3 interleaved trials: this box's wall-clock variance swamped the
-    # single-sample speedup round-over-round (judge r3 finding 2), so
-    # the committed evidence is (a) MEDIAN-of-3 walls and (b) the
-    # max/median TASK SPREAD gate, which is the stable straggler signal
-    # (it reproduced for every party when the wall number did not).
+    # reference plan's refine shuffle is a few MB, so AQE merges it to
+    # ~7 tasks and the hot tile hides inside a merged task.  At 100 TB
+    # partitions are ~128 MB each and never coalesce away — and AQE's
+    # skew handling cannot split a GROUP (all rows of one tile must meet
+    # in one task), which is why the shipping plan has no group.  Wall
+    # times and spreads below therefore reflect the many-partition
+    # regime.  3 interleaved trials: this box's wall-clock variance
+    # swamped the single-sample speedup round-over-round (judge r3
+    # finding 2), so the committed evidence is (a) MEDIAN-of-3 walls and
+    # (b) the max/median TASK SPREAD gate, which is the stable straggler
+    # signal (it reproduced for every party when the wall number did not).
     import math
     import statistics
 
@@ -299,43 +333,44 @@ def main() -> None:
         # extras, not timings: the headline total stays comparable
         # round-over-round (same 7 queries)
         for t in range(3):
-            n_u, dt_u, spread_u = skew_run(None)
-            n_s, dt_s, spread_s = skew_run(16)
-            assert n_u == n_s, (n_u, n_s)  # salting is pure plan shaping
+            n_r, dt_r, spread_r = skew_run(grouped_refine_reference)
+            n_s, dt_s, spread_s = skew_run(tile_points_shuffle)
+            assert n_r == n_s, (n_r, n_s)  # same memberships, other plan
             trials.append(
-                {"dt_u": dt_u, "dt_s": dt_s, "sp_u": spread_u, "sp_s": spread_s}
+                {"dt_r": dt_r, "dt_s": dt_s, "sp_r": spread_r, "sp_s": spread_s}
             )
             print(
-                f"# skew trial {t}: unsalted {dt_u:.1f}s (spread {spread_u:.1f})"
-                f" -> salted {dt_s:.1f}s (spread {spread_s:.1f})",
+                f"# skew trial {t}: grouped reference {dt_r:.1f}s (spread {spread_r:.1f})"
+                f" -> tile_points_shuffle {dt_s:.1f}s (spread {spread_s:.1f})",
                 file=sys.stderr,
                 flush=True,
             )
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    extras["skew_unsalted_sec"] = round(statistics.median(t["dt_u"] for t in trials), 3)
-    extras["skew_salted_sec"] = round(statistics.median(t["dt_s"] for t in trials), 3)
-    extras["skew_unsalted_walls"] = [round(t["dt_u"], 2) for t in trials]
-    extras["skew_salted_walls"] = [round(t["dt_s"], 2) for t in trials]
-    extras["skew_unsalted_task_spreads"] = [round(t["sp_u"], 2) for t in trials]
-    extras["skew_salted_task_spreads"] = [round(t["sp_s"], 2) for t in trials]
-    # back-compat scalar spreads: median of the trials
-    extras["skew_unsalted_task_spread"] = round(
-        statistics.median(t["sp_u"] for t in trials), 2
+    extras["skew_grouped_ref_sec"] = round(statistics.median(t["dt_r"] for t in trials), 3)
+    extras["skew_shuffle_sec"] = round(statistics.median(t["dt_s"] for t in trials), 3)
+    extras["skew_grouped_ref_walls"] = [round(t["dt_r"], 2) for t in trials]
+    extras["skew_shuffle_walls"] = [round(t["dt_s"], 2) for t in trials]
+    extras["skew_grouped_ref_task_spreads"] = [round(t["sp_r"], 2) for t in trials]
+    extras["skew_shuffle_task_spreads"] = [round(t["sp_s"], 2) for t in trials]
+    # scalar spreads: median of the trials
+    extras["skew_grouped_ref_task_spread"] = round(
+        statistics.median(t["sp_r"] for t in trials), 2
     )
-    extras["skew_salted_task_spread"] = round(
+    extras["skew_shuffle_task_spread"] = round(
         statistics.median(t["sp_s"] for t in trials), 2
     )
-    extras["skew_salted_speedup"] = round(
-        extras["skew_unsalted_sec"] / extras["skew_salted_sec"], 2
+    extras["skew_shuffle_speedup"] = round(
+        extras["skew_grouped_ref_sec"] / extras["skew_shuffle_sec"], 2
     )
     extras["skew_memberships"] = n_s
-    # THE GATE: salting must cut the straggler spread in every trial
-    # whose probes resolved (NaN = REST probe degraded, excluded).
-    # Zero resolved trials = INDETERMINATE (no spread evidence), which
-    # is not the same claim as "salting failed to cut the spread".
+    # THE GATE: the shipping call's straggler spread must be below the
+    # grouped reference's in every trial whose probes resolved (NaN =
+    # REST probe degraded, excluded).  Zero resolved trials =
+    # INDETERMINATE (no spread evidence), which is not the same claim
+    # as "the spread was not cut".
     resolved = [
-        t for t in trials if not (math.isnan(t["sp_u"]) or math.isnan(t["sp_s"]))
+        t for t in trials if not (math.isnan(t["sp_r"]) or math.isnan(t["sp_s"]))
     ]
     extras["skew_spread_gate_trials_resolved"] = len(resolved)
     if not resolved:
@@ -346,7 +381,7 @@ def main() -> None:
             flush=True,
         )
     else:
-        gate = all(t["sp_u"] > t["sp_s"] for t in resolved)
+        gate = all(t["sp_r"] > t["sp_s"] for t in resolved)
         extras["skew_spread_gate_all_trials"] = gate
         if not gate:
             print("# WARNING: skew spread gate FAILED", file=sys.stderr, flush=True)

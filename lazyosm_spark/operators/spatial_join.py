@@ -9,16 +9,16 @@ two-phase Spark plan:
      cell == tile_id.  Because tile_id packs its resolution in the high
      bits, one long-vs-long equi-join handles a mixed-resolution tile
      pyramid.  Catalyst/AQE picks broadcast vs shuffle.
-  2. REFINE: cogrouped applyInPandas per tile — one vectorized ray-cast
-     (numpy, functions/geometry.pip_mask) of the tile's candidate point
-     batch against its ring.  Cogroup means the ring ships once per
-     group, not once per candidate row.
+  2. REFINE: a map-side Arrow filter over the candidate rows — per
+     Arrow batch, one vectorized ray-cast (numpy,
+     functions/geometry.pip_mask) per distinct tile in the batch.
 
-Skew (the "dense city" tile): ``salt=n`` splits each tile's candidate
-batch across n subgroups — candidates get pmod(xxhash64(point_id), n),
-tiles replicate n ways — so no single task owns a hot tile.  This plus
-AQE skew-join is the engine's answer to the reference's LRU-thrash
-Limit override (nodemap.go:156-158).
+Skew (the "dense city" tile): the refine is map-side, so a hot tile is
+never a group one task must own — it is refined by whichever tasks the
+coarse join's output lands in.  At scale the coarse join is a
+sort-merge join, and AQE's skew-join splits a hot cell key there.  This
+is the engine's answer to the reference's LRU-thrash Limit override
+(nodemap.go:156-158).
 
 At 10^12 points the coarse join shuffles |points| × |resolutions| rows;
 keep the tile pyramid to the 2-3 resolutions that bound tile sizes, and
@@ -36,28 +36,43 @@ from pyspark.sql import functions as F
 from lazyosm_spark.functions.cells import cell_encode
 from lazyosm_spark.functions.geometry import pip_mask
 
-MEMBERSHIP_SCHEMA = "point_id string, tile_id long, resolution int"
+
+def _open_ring(ring) -> np.ndarray:
+    """A ring as an (M, 2) array without a repeated closing vertex:
+    pip_mask closes the ring implicitly (reference wraparound)."""
+    xy = np.asarray([list(p) for p in ring], dtype=np.float64)
+    if len(xy) > 1 and (xy[0] == xy[-1]).all():
+        xy = xy[:-1]
+    return xy
 
 
-def _refine(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One tile's candidate batch (ring constant within the group):
-    one vectorized ray-cast of all points against the ring."""
-    if len(pdf) == 0:
-        return pd.DataFrame(columns=["point_id", "tile_id", "resolution"])
-    ring = np.asarray([list(p) for p in pdf["ring"].iloc[0]], dtype=np.float64)
-    if len(ring) > 1 and (ring[0] == ring[-1]).all():
-        ring = ring[:-1]  # implicit closing edge (reference wraparound)
-    xy = np.column_stack(
-        [pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64)]
-    )
-    inside = pip_mask(ring, xy)
-    return pd.DataFrame(
-        {
-            "point_id": pdf["point_id"].to_numpy()[inside],
-            "tile_id": pdf["tile_id"].iloc[0],
-            "resolution": pdf["resolution"].iloc[0],
-        }
-    )
+def _pip_per_tile(tid: np.ndarray, lon: np.ndarray, lat: np.ndarray, ring_at) -> np.ndarray:
+    """Inside mask for one Arrow batch of (tile, point) rows: one
+    vectorized ray-cast per distinct tile id.  Rows of a tile need not
+    be contiguous; tile ids are keys, so ``ring_at(i)`` gives the ring
+    of row i's tile (None skips the tile)."""
+    out = np.zeros(len(tid), dtype=bool)
+    order = np.argsort(tid, kind="stable")
+    bounds = np.flatnonzero(np.diff(tid[order])) + 1
+    for seg in np.split(order, bounds):
+        if len(seg) == 0:
+            continue
+        ring = ring_at(seg[0])
+        if ring is None:
+            continue
+        out[seg] = pip_mask(ring, np.column_stack([lon[seg], lat[seg]]))
+    return out
+
+
+def _inside_ring(
+    tile_id: pd.Series, ring: pd.Series, lon: pd.Series, lat: pd.Series
+) -> pd.Series:
+    """Arrow-batch PIP filter over rows that carry their tile's ring:
+    each tile's ring is parsed once, from its first row in the batch."""
+    return pd.Series(_pip_per_tile(
+        tile_id.to_numpy(np.int64), lon.to_numpy(np.float64),
+        lat.to_numpy(np.float64), lambda i: _open_ring(ring.iloc[i]),
+    ))
 
 
 def tile_points(
@@ -80,7 +95,9 @@ def tile_points(
     mixed-resolution pyramid), then refine with a vectorized pandas
     UDF that looks rings up in a broadcast dict and ray-casts each
     tile's batch slice in one numpy call.  Every stage is map-side;
-    AQE/salting is unnecessary because no shuffle exists to skew.
+    AQE/salting is unnecessary because no shuffle exists to skew;
+    ``salt`` has no effect (it is passed on to tile_points_shuffle,
+    which ignores it too).
 
     AUTO-DISPATCH: a tile set above ``broadcast_limit`` rows would OOM
     the driver collect, so it falls through to tile_points_shuffle
@@ -94,40 +111,23 @@ def tile_points(
     Ring vertex-on-boundary semantics are the reference Pip's (bottom/
     left inclusive, top/right exclusive) — golden fixtures pin them.
     """
-    import numpy as np  # local for the closure
-
     if (tiles.count() if n_tiles is None else n_tiles) > broadcast_limit:
         return tile_points_shuffle(points, tiles, point_id, lon, lat, salt)
 
     tile_rows = tiles.select("tile_id", "resolution", "ring").collect()
     res_list = sorted({int(r["resolution"]) for r in tile_rows})
-    rings = {}
-    for r in tile_rows:
-        ring = np.asarray([list(p) for p in r["ring"]], dtype=np.float64)
-        if len(ring) > 1 and (ring[0] == ring[-1]).all():
-            ring = ring[:-1]
-        rings[int(r["tile_id"])] = ring
+    rings = {int(r["tile_id"]): _open_ring(r["ring"]) for r in tile_rows}
     sc = points.sparkSession.sparkContext
     b_rings = sc.broadcast(rings)
 
     @F.pandas_udf("boolean")
     def inside_tile(tile_id: pd.Series, lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
         ring_map = b_rings.value
-        out = np.zeros(len(tile_id), dtype=bool)
-        lon_v = lon_s.to_numpy(np.float64)
-        lat_v = lat_s.to_numpy(np.float64)
         tid = tile_id.to_numpy(np.int64)
-        # one vectorized ray-cast per distinct tile in the batch
-        order = np.argsort(tid, kind="stable")
-        sorted_tid = tid[order]
-        bounds = np.flatnonzero(np.diff(sorted_tid)) + 1
-        for seg in np.split(order, bounds):
-            ring = ring_map.get(int(tid[seg[0]]))
-            if ring is None or len(seg) == 0:
-                continue
-            xy = np.column_stack([lon_v[seg], lat_v[seg]])
-            out[seg] = pip_mask(ring, xy)
-        return pd.Series(out)
+        return pd.Series(_pip_per_tile(
+            tid, lon_s.to_numpy(np.float64), lat_s.to_numpy(np.float64),
+            lambda i: ring_map.get(int(tid[i])),
+        ))
 
     pts = points.select(
         F.col(point_id).cast("string").alias("point_id"),
@@ -157,14 +157,18 @@ def tile_points_shuffle(
     lat: str = "lat",
     salt: int | None = None,
 ) -> DataFrame:
-    """Shuffle-based variant for tile sets too large to broadcast:
-    coarse cell equi-join carrying the ring, then a grouped PIP refine
-    per (tile[, salt-bucket]).  Salting splits hot tiles across tasks
-    (the dense-city skew case).
+    """Variant for tile sets too large to broadcast (rings stay
+    distributed): coarse cell equi-join carrying each tile's ring on
+    its candidate rows, then a map-side Arrow filter that ray-casts
+    each batch once per distinct tile (ring parsed from the tile's
+    first row in the batch).  Plan: scan -> explode to cells -> coarse
+    join -> one ArrowEvalPython filter; nothing is grouped, so no
+    refine shuffle exists and a hot tile is refined by whichever tasks
+    its candidates land in.  A hot cell key in a sort-merge coarse
+    join is split by AQE's skew-join.
 
-    Note: a cogrouped refine (ring shipped once per group) segfaults
-    pyarrow 16.1's cogroup serializer on multi-row batches —
-    join+groupBy is the stable formulation.
+    ``salt`` has no effect: there is no grouped stage left to salt.  It
+    stays in the signature for existing callers.
     """
     res_rows = tiles.select("resolution").distinct().collect()
     res_list = sorted(int(r[0]) for r in res_rows)
@@ -182,20 +186,20 @@ def tile_points_shuffle(
             F.array(*[cell_encode(F.col("lon"), F.col("lat"), r) for r in res_list])
         ).alias("cell"),
     )
-    joined = cells.join(
+    cand = cells.join(
         tiles.select(
             F.col("tile_id").alias("cell"), "tile_id", "resolution", "ring"
         ),
         "cell",
     )
-    if salt:
-        joined = joined.withColumn(
-            "salt_b", F.pmod(F.xxhash64("point_id"), F.lit(salt)).cast("int")
-        )
-        grouped = joined.groupBy("tile_id", "salt_b")
-    else:
-        grouped = joined.groupBy("tile_id")
-    return grouped.applyInPandas(_refine, MEMBERSHIP_SCHEMA)
+    inside_ring = F.pandas_udf(_inside_ring, "boolean")
+    return cand.filter(
+        inside_ring(F.col("tile_id"), F.col("ring"), F.col("lon"), F.col("lat"))
+    ).select(
+        "point_id",
+        F.col("tile_id").cast("long").alias("tile_id"),
+        F.col("resolution").cast("int").alias("resolution"),
+    )
 
 
 def tile_points_coarse(
@@ -286,29 +290,7 @@ def polyfill(
         ((lat_min + lat_max) / 2).alias("center_lat"),
     )
 
-    @F.pandas_udf("boolean")
-    def center_inside(
-        tid_s: pd.Series, ring_s: pd.Series, lon_s: pd.Series, lat_s: pd.Series
-    ) -> pd.Series:
-        out = np.zeros(len(ring_s), dtype=bool)
-        lon_v = lon_s.to_numpy(np.float64)
-        lat_v = lat_s.to_numpy(np.float64)
-        tid = tid_s.to_numpy(np.int64)
-        # one tile's exploded rows arrive contiguously: one vectorized
-        # ray-cast per tile run (run boundaries by tile_id change)
-        bounds = np.flatnonzero(np.diff(tid)) + 1
-        for seg in np.split(np.arange(len(tid)), bounds):
-            if len(seg) == 0:
-                continue
-            ring = np.asarray(
-                [list(p) for p in ring_s.iloc[seg[0]]], dtype=np.float64
-            )
-            if len(ring) > 1 and (ring[0] == ring[-1]).all():
-                ring = ring[:-1]
-            xy = np.column_stack([lon_v[seg], lat_v[seg]])
-            out[seg] = pip_mask(ring, xy)
-        return pd.Series(out)
-
+    center_inside = F.pandas_udf(_inside_ring, "boolean")
     return cand.filter(
         center_inside(
             F.col("tile_id"), F.col("_ring"), F.col("center_lon"), F.col("center_lat")

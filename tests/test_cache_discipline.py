@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from lazyosm_spark.cache import n_persistent_rdds
 
 SF = "/root/testdata/sf0.001"
+TILE_POINTS_SHUFFLE_JOBS = 4
 
 
 def _delta(spark, fn) -> int:
@@ -100,3 +101,40 @@ def test_shingle_pair_operators_leave_no_cache(spark, op):
     for _ in range(2):
         assert _delta(spark, lambda: getattr(dedup, op)(docs)) <= 1
         assert _cache_manager_empty(spark)
+
+
+def _jobs_in_call(spark, fn) -> int:
+    """Jobs that ``fn`` runs, counted through a job group of its own."""
+    sc = spark.sparkContext
+    key, group = "spark.jobGroup.id", "jobs-budget"
+    prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty(key, prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags the jobs
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tile_points_shuffle_jobs_budget_and_no_residue(spark, fx):
+    """One tile_points_shuffle call, frame build plus collect, runs
+    TILE_POINTS_SHUFFLE_JOBS jobs: the resolution probe's two (its
+    distinct's shuffle stage, then its collect), the tile broadcast,
+    and the result — the map-side PIP filter adds no refine shuffle
+    job.  It leaves CacheManager empty and adds no persistent RDD."""
+    from lazyosm_spark.operators.spatial_join import tile_points_shuffle
+
+    pts = spark.createDataFrame(
+        [(f"p{i}", -180.0 + 360.0 * ((i * 0.7548776662466927) % 1.0),
+          -85.0 + 170.0 * ((i * 0.5698402909980532) % 1.0)) for i in range(300)],
+        "point_id string, lon double, lat double",
+    )
+    spark.catalog.clearCache()
+    base = n_persistent_rdds(spark)
+    n_jobs = _jobs_in_call(
+        spark, lambda: tile_points_shuffle(pts, fx["tiles"], salt=8).collect()
+    )
+    assert n_jobs == TILE_POINTS_SHUFFLE_JOBS
+    assert _cache_manager_empty(spark)
+    assert n_persistent_rdds(spark) == base

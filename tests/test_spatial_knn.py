@@ -39,8 +39,9 @@ def test_tile_points_matches_bruteforce_oracle(spark, fx):
 
 
 def test_tile_points_variants_agree(spark, fx):
-    """broadcast (flagship) == shuffle == salted shuffle — the three
-    physical strategies share exact semantics."""
+    """broadcast (flagship) == shuffle, called with and without a salt
+    (which has no effect) — both physical strategies share exact
+    semantics."""
     from lazyosm_spark.operators.spatial_join import tile_points, tile_points_shuffle
 
     pdf = spark.createDataFrame(
@@ -63,8 +64,8 @@ def test_tile_points_variants_agree(spark, fx):
 
 def test_tile_points_skewed_hotspot(spark, fx):
     """Dense-city skew: 90% of points inside ONE tile's cell.  The
-    salted shuffle variant must agree with broadcast, and salting must
-    actually split the hot group across salt buckets."""
+    shuffle variant (called with a salt, which has no effect) must
+    agree with broadcast on the hot tile."""
     from lazyosm_spark.operators.spatial_join import tile_points, tile_points_shuffle
 
     # pick one real tile and aim points at its ring centroid
@@ -93,14 +94,10 @@ def test_tile_points_skewed_hotspot(spark, fx):
 
 def test_tile_points_auto_dispatches_to_shuffle(spark, fx):
     """Above broadcast_limit the flagship must take the shuffle path
-    (no driver ring collect; grouped-refine Exchange in the plan) and
-    produce identical membership."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
+    (no driver ring collect; rings ride the coarse join into a map-side
+    Arrow PIP filter) and produce identical membership."""
     from lazyosm_spark.operators.spatial_join import tile_points
+    from tools.explain_plans import map_side_refine_checks, plan_of
 
     pts = spark.createDataFrame(
         [(f"p{i}",
@@ -111,15 +108,115 @@ def test_tile_points_auto_dispatches_to_shuffle(spark, fx):
     )
     bc = tile_points(pts, fx["tiles"])  # broadcast path
     sh = tile_points(pts, fx["tiles"], broadcast_limit=3)  # forced dispatch
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sh.explain("formatted")
-    plan = buf.getvalue()
-    assert "FlatMapGroupsInPandas" in plan  # grouped refine, not collect
-    assert "Exchange" in plan
+    plan = plan_of(sh)
+    assert "_inside_ring(" in plan  # the ring-per-row refine, not inside_tile
+    failed = [desc for desc, ok in map_side_refine_checks(plan) if not ok]
+    assert not failed, failed
     a = {tuple(r) for r in bc.select("point_id", "tile_id").collect()}
     b = {tuple(r) for r in sh.select("point_id", "tile_id").collect()}
     assert a == b and len(a) > 0
+
+
+def _cell(lon: float, lat: float, res: int) -> int:
+    """cells.cell_encode in Python (same float operations, same ids)."""
+    n = 1 << res
+    x = max(0, min(int(np.floor((lon + 180.0) / 360.0 * n)), n - 1))
+    y = max(0, min(int(np.floor((lat + 90.0) / 180.0 * n)), n - 1))
+    return (res << 58) | (x << 29) | y
+
+
+def _box(res: int, x: int, y: int, f0: float = 0.0, f1: float = 1.0) -> list:
+    """Corners of cell (x, y)'s sub-box [f0, f1]^2, counter-clockwise."""
+    n = 1 << res
+    lon0, lat0, dlon, dlat = x / n * 360.0 - 180.0, y / n * 180.0 - 90.0, 360.0 / n, 180.0 / n
+    return [[lon0 + a * dlon, lat0 + b * dlat] for a, b in
+            [(f0, f0), (f1, f0), (f1, f1), (f0, f1)]]
+
+
+def test_tile_points_shuffle_batch_boundaries_property(spark):
+    """The map-side refine gets Arrow batches of 7 rows in which tile
+    ids interleave and a tile's rows span several batches.  On nested
+    tiles at resolutions 3-6 (closed and open rings, concave, exact cell
+    boxes) and shuffled points on ring vertices, ring edges, cell
+    boundaries and duplicated rows, tile_points_shuffle equals the
+    scalar reference pip over cell candidates and broadcast
+    tile_points, row for row; a cloud with no candidates gives an
+    empty frame with the exact membership schema."""
+    from collections import Counter
+
+    from lazyosm_spark.operators.spatial_join import tile_points, tile_points_shuffle
+
+    def mid(a, b):
+        return [(a[0] + b[0]) / 2, (a[1] + b[1]) / 2]
+
+    b3 = _box(3, 5, 4)
+    b4 = _box(4, 10, 8, 0.1, 0.9)
+    arrow = [b4[0], mid(b4[0], b4[1]), [mid(b4[0], b4[1])[0], mid(b4[1], b4[2])[1]],
+             b4[1], b4[2], b4[3]]  # concave: a notch cut from the bottom edge
+    b5 = _box(5, 21, 17)
+    tri = [b5[0], b5[1], mid(b5[2], b5[3])]
+    b6 = _box(6, 42, 34)
+    diamond = [mid(b6[0], b6[1]), mid(b6[1], b6[2]), mid(b6[2], b6[3]), mid(b6[3], b6[0])]
+    rings = {
+        (3, 5, 4): b3 + [b3[0]],            # exact cell box, closed
+        (4, 10, 8): arrow,                  # concave, open
+        (4, 11, 9): _box(4, 11, 9),         # exact cell box, open
+        (5, 21, 17): tri + [tri[0]],        # triangle, closed
+        (5, 20, 16): _box(5, 20, 16, 0.3, 0.7),  # interior box, open
+        (6, 42, 34): diamond,               # vertices on the cell's edges
+        (6, 43, 35): _box(6, 43, 35, 0.0, 0.5) + [_box(6, 43, 35)[0]],  # on 2 cell edges
+    }
+    tile_rows = [((r << 58) | (x << 29) | y, r, ring) for (r, x, y), ring in rings.items()]
+    tiles = spark.createDataFrame(
+        tile_rows, "tile_id long, resolution long, ring array<array<double>>"
+    )
+
+    rng = np.random.default_rng(11)
+    xy = []
+    for (r, x, y), ring in rings.items():
+        cell = _box(r, x, y)
+        for poly in (ring, cell):
+            for i in range(len(poly)):
+                a, b = poly[i], poly[(i + 1) % len(poly)]
+                xy += [a, mid(a, b), [a[0] + 0.25 * (b[0] - a[0]), a[1] + 0.25 * (b[1] - a[1])]]
+    lo, hi = b3[0], b3[2]
+    xy += [[float(u), float(v)] for u, v in
+           zip(rng.uniform(lo[0], hi[0], 400), rng.uniform(lo[1], hi[1], 400))]
+    pts = [(f"q{i}", float(p[0]), float(p[1])) for i, p in enumerate(xy)]
+    pts += [(f"d{i}", lon, lat) for i, (_, lon, lat) in enumerate(pts[::5])]  # same place
+    pts += pts[::7]  # duplicated rows, same id
+    pts = [pts[i] for i in rng.permutation(len(pts))]
+
+    want = Counter()
+    for tid, r, ring in tile_rows:
+        open_ring = [tuple(p) for p in ring]
+        if open_ring[0] == open_ring[-1]:
+            open_ring = open_ring[:-1]
+        for pid, lon, lat in pts:
+            if _cell(lon, lat, r) == tid and ro.pip(open_ring, (lon, lat)):
+                want[(pid, tid, r)] += 1
+    assert len(want) > 100
+
+    schema = "point_id string, lon double, lat double"
+    pdf = spark.createDataFrame(pts, schema)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        sh = tile_points_shuffle(pdf, tiles, salt=4)
+        got = Counter(tuple(r) for r in sh.collect())
+        bc = Counter(tuple(r) for r in tile_points(pdf, tiles).collect())
+        empty = tile_points_shuffle(
+            spark.createDataFrame([("far", -179.9, -89.9), ("far2", 179.9, 89.9)], schema), tiles
+        )
+        empty_rows = empty.collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert got == want
+    assert bc == want
+    membership = "struct<point_id:string,tile_id:bigint,resolution:int>"
+    assert sh.schema.simpleString() == membership
+    assert empty_rows == [] and empty.schema.simpleString() == membership
 
 
 def test_dispatch_counts_cached(spark, fx):

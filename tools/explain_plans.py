@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -23,6 +24,52 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_tree(plan: str) -> list[str]:
+    """The operator-tree lines of a formatted plan (before the per-node
+    detail blocks)."""
+    out = []
+    for line in plan.splitlines():
+        if re.match(r"^\(\d+\)", line.strip()):
+            break
+        if line.strip():
+            out.append(line)
+    return out
+
+
+def _depth(line: str) -> int:
+    return len(re.match(r"^[\s:+\-|]*", line).group(0))
+
+
+def plan_ancestors(tree: list[str], idx: int) -> list[str]:
+    """Lines of tree[idx]'s ancestors, nearest first."""
+    out = []
+    cur = _depth(tree[idx])
+    for j in range(idx - 1, -1, -1):
+        dj = _depth(tree[j])
+        if dj < cur:
+            cur = dj
+            out.append(tree[j])
+    return out
+
+
+def map_side_refine_checks(plan: str) -> list[tuple[str, bool]]:
+    """The shape of a join whose PIP refine runs map-side: no grouped
+    pandas stage, no Exchange after the coarse join, and the refine is
+    an ArrowEvalPython Filter over the join's output."""
+    tree = plan_tree(plan)
+    join = next((i for i, l in enumerate(tree) if "Join" in l), None)
+    above = plan_ancestors(tree, join) if join is not None else []
+    pip = next((i for i, l in enumerate(above) if "ArrowEvalPython" in l), None)
+    return [
+        ("no FlatMapGroupsInPandas (no per-group pandas frames)",
+         "FlatMapGroupsInPandas" not in plan),
+        ("no Exchange downstream of the coarse join (no refine shuffle)",
+         join is not None and not any("Exchange" in l for l in above)),
+        ("PIP refine is an ArrowEvalPython Filter over the join output",
+         pip is not None and pip + 1 < len(above) and "Filter" in above[pip + 1]),
+    ]
 
 
 def main() -> None:
@@ -152,21 +199,15 @@ def main() -> None:
     ]
     sections.append(("phash_hamming_knn (pigeonhole band ladder)", p, checks))
 
-    # 8. salted shuffle spatial join: the hot-tile (skew) plan — the
-    # refine groups on (tile_id, salt_b) so no single task owns a dense
-    # city tile (bench.py's skew world measures the task-time spread)
+    # 8. shuffle spatial join (the auto-dispatch target above
+    # broadcast_limit): the PIP refine is a map-side Arrow filter over
+    # the coarse join's output, so nothing is grouped or shuffled after
+    # the join and a hot tile is never one task's group
     from lazyosm_spark.operators.spatial_join import tile_points_shuffle
 
-    sj_s = tile_points_shuffle(pts, tiles, salt=8)
-    p = plan_of(sj_s)
-    checks = [
-        ("refine shuffle keyed on (tile_id, salt_b)",
-         "hashpartitioning(tile_id" in p and "salt_b" in p),
-        ("salt bucket derives from xxhash64(point_id)", "xxhash64" in p),
-        ("grouped PIP refine is a FlatMapGroupsInPandas stage",
-         "FlatMapGroupsInPandas" in p),
-    ]
-    sections.append(("tile_points_shuffle salt=8 (hot-tile skew split)", p, checks))
+    p = plan_of(tile_points_shuffle(pts, tiles, salt=8))
+    checks = map_side_refine_checks(p)
+    sections.append(("tile_points_shuffle (map-side Arrow PIP refine)", p, checks))
 
     # 9. sequence packing: the distributed prefix sum must never plan
     # an Exchange SinglePartition (the global-ORDER-BY-window trap that
@@ -194,36 +235,15 @@ def main() -> None:
     q10 = bloom_semi_join(li, small_keys, "l_orderkey", n_keys=10000)
     p = plan_of(q10)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    import re as _re
-
-    def _tree(plan: str) -> list[str]:
-        out = []
-        for line in plan.splitlines():
-            if _re.match(r"^\(\d+\)", line.strip()):
-                break
-            if line.strip():
-                out.append(line)
-        return out
-
-    def _depth(line: str) -> int:
-        return len(_re.match(r"^[\s:+\-|]*", line).group(0))
-
     def _probe_pre_exchange(plan: str) -> tuple[bool, bool]:
         """(an Exchange is an ANCESTOR of the probe,
         no Exchange is a DESCENDANT of the probe)."""
-        tree = _tree(plan)
+        tree = plan_tree(plan)
         idx = next((i for i, l in enumerate(tree) if "ArrowEvalPython" in l), None)
         if idx is None:
             return False, False
         d = _depth(tree[idx])
-        anc_exchange = False
-        cur = d
-        for j in range(idx - 1, -1, -1):
-            dj = _depth(tree[j])
-            if dj < cur:
-                cur = dj
-                if "Exchange" in tree[j]:
-                    anc_exchange = True
+        anc_exchange = any("Exchange" in l for l in plan_ancestors(tree, idx))
         no_desc_exchange = True
         for j in range(idx + 1, len(tree)):
             if _depth(tree[j]) <= d:
