@@ -82,7 +82,7 @@ def main() -> None:
     # ------------------------------------------------------------------
     # 1. phash Hamming kNN: 10^6 items, 2k queries, clustered hashes
     # ------------------------------------------------------------------
-    from lazyosm_spark.operators.knn import phash_hamming_knn
+    from lazyosm_spark.operators.knn import FALLBACK_SALT, RADII, phash_hamming_knn
 
     # two id-derived single-bit flips -> intra-cluster distance <= 4.
     # shiftleft (not pow): cast(pow(2,63) as double->long) saturates to
@@ -109,8 +109,8 @@ def main() -> None:
         {
             "k": 5,
             "n_queries": N_PHASH_QUERIES,
-            "radii": [2, 6, 14, 30, 62],
-            "fallback_salt": 32,
+            "radii": list(RADII),
+            "fallback_salt": FALLBACK_SALT,
         },
     )
 

@@ -41,8 +41,8 @@ def lineitem_points(spark, sf_dir):
 
 def knn_panel(spark, sf_dir):
     """R2 low-discrepancy query panel (one query per part row) — the
-    ONE construction shared by every grid_knn bench site (bench cold,
-    bench repeat, run_sf1); a typo'd constant in a stray copy would
+    ONE construction shared by every grid_knn bench site (bench.py,
+    run_sf1); a typo'd constant in a stray copy would
     silently bench a different panel."""
     from pyspark.sql import functions as F
 
@@ -211,40 +211,6 @@ def main() -> None:
     part_bench = spark.read.parquet(os.path.join(SF_DIR, "part.parquet"))
     n_queries_knn = part_bench.count()
     timed("grid_knn", knn_run)
-
-    # q5b (extras only, headline total stays round-comparable): the
-    # repeat-call fast path — points prepared ONCE (pre-encoded,
-    # co-located, persisted), then the same panel served against the
-    # cache.  This is the serving shape: one layout pass, many panels.
-    from lazyosm_spark.operators.knn import pick_res, prepare_points
-
-    res_knn = pick_res(n_points, 5)
-    prep = prepare_points(pts, res_knn)
-    prep.count()  # materialize the layout outside the timed region
-
-    def knn_repeat():
-        return grid_knn(
-            knn_panel(spark, SF_DIR),
-            pts,
-            k=5,
-            n_queries=n_queries_knn,
-            points_prepared=prep,
-            prepared_res=res_knn,
-        ).count()
-
-    rpt_walls = []
-    for _ in range(3):
-        t0 = time.time()
-        knn_repeat()
-        rpt_walls.append(round(time.time() - t0, 2))
-    prep.unpersist()
-    extras["grid_knn_repeat_walls"] = rpt_walls
-    extras["grid_knn_repeat"] = round(statistics.median(rpt_walls), 3)
-    print(
-        f"# grid_knn_repeat: median {extras['grid_knn_repeat']}s of {rpt_walls}",
-        file=sys.stderr,
-        flush=True,
-    )
 
     # q6: minhash LSH dedup pipeline over documents
     timed(

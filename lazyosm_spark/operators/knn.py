@@ -39,8 +39,37 @@ from lazyosm_spark.functions.cells import cell_encode, k_ring, ring_parent_cover
 from lazyosm_spark.functions.hashing import hamming64
 
 
-def _dist2(qlon, qlat, plon, plat):
-    return (qlon - plon) * (qlon - plon) + (qlat - plat) * (qlat - plat)
+# Plan constants.  Both ladders' results are invariant to them
+# (exactness comes from a distance bound + escalation), so each one is
+# pure plan tuning.
+RING = 1  # Chebyshev ring radius (cells) around a query's cell
+LEVEL_STEP = 2  # resolutions dropped per escalation level
+BROADCAST_ROWS = 4_000_000  # pending x ring cells at or below: broadcast queries
+COMPACT_POINTS_ROWS = 100_000_000  # known point counts at or below: compact mode
+EXPLODE_BROADCAST_MIN = 65_536  # floor of the explode-side crossover
+# phash_hamming_knn: Hamming radius ladder, then the salted exact fallback
+RADII = (2, 6, 14, 30, 62)
+FALLBACK_SALT = 32
+
+
+def _sides(queries: DataFrame, points: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(query_id, qlon, qlat) and (neighbor_id, plon, plat) projections.
+    Ids keep their INPUT type: numeric ids sort/shuffle cheaper than
+    their string casts in the top-k window; callers needing string
+    tie-break semantics (e.g. the DuckDB-oracle twins) pre-cast."""
+    q = queries.select("query_id", F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
+    p = points.select(
+        F.col("point_id").alias("neighbor_id"),
+        F.col("lon").alias("plon"),
+        F.col("lat").alias("plat"),
+    )
+    return q, p
+
+
+def _with_dist(cand: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, dist): planar Euclidean in degrees."""
+    dx, dy = F.col("qlon") - F.col("plon"), F.col("qlat") - F.col("plat")
+    return cand.select("query_id", "neighbor_id", F.sqrt(dx * dx + dy * dy).alias("dist"))
 
 
 def _topk(cand: DataFrame, k: int) -> DataFrame:
@@ -54,26 +83,23 @@ def _topk(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
-def pick_res(
-    n_points: int, k: int, start_ring: int = 1, target_candidates: int | None = None
-) -> int:
+def pick_res(n_points: int, k: int) -> int:
     """Density-derived start resolution: expected ring candidates per
-    query ~= target_candidates (default max(256, 48k)).  grid_knn's
-    result is res-INVARIANT (exactness comes from the distance bound +
-    escalation), so this is pure plan tuning.  The default targets
-    ~pi/18 x tc ~= max(45, 8.4k) expected candidates inside the
-    guarantee circle — enough margin over k that escalation is a
-    never-executed safety net on roughly uniform data.  Round-6
-    A/B (BENCH/r06): the old max(32, 4k) target left ~9% of a 200k
-    panel escalating at sf1 (an extra full point pass + driver round
-    trip per level, 7.1s median); 48k retired everything at level 0
-    (4.0s); 96k over-coarsened (window input x4, 8.2s).  The window
-    top-k is candidate-linear, so going coarser than the escalation
-    break-even only adds cost."""
+    query ~= max(256, 48k).  grid_knn's result is res-INVARIANT
+    (exactness comes from the distance bound + escalation), so this is
+    pure plan tuning.  The target gives ~pi/18 x tc ~= max(45, 8.4k)
+    expected candidates inside the guarantee circle — enough margin
+    over k that escalation is a never-executed safety net on roughly
+    uniform data.  Round-6 A/B (BENCH/r06): the old max(32, 4k) target
+    left ~9% of a 200k panel escalating at sf1 (an extra full point
+    pass + driver round trip per level, 7.1s median); 48k retired
+    everything at level 0 (4.0s); 96k over-coarsened (window input x4,
+    8.2s).  The window top-k is candidate-linear, so going coarser than
+    the escalation break-even only adds cost."""
     import math
 
-    tc = target_candidates or max(256, 48 * k)
-    ring_cells = (2 * start_ring + 1) ** 2
+    tc = max(256, 48 * k)
+    ring_cells = (2 * RING + 1) ** 2
     # pts/cell = n / 4^res; solve ring_cells * pts/cell ~= tc.  ROUND
     # (not floor) the half-log: flooring overshot realized candidates
     # by up to 4x of target (the window top-k is candidate-linear —
@@ -83,69 +109,28 @@ def pick_res(
     return max(0, min(12, round(math.log2(max(n_points * ring_cells / tc, 1.0)) / 2)))
 
 
-def prepare_points(
-    points: DataFrame, res: int, n_partitions: int | None = None
-) -> DataFrame:
-    """Repeat-call fast path (round-4 verdict item 4): encode the
-    points table ONCE at ``res``, range-partition on the cell id
-    (spatial co-location — the repartition_by_cell layout), and persist.
-    Pass the result to any number of grid_knn calls via
-    ``points_prepared=`` + ``prepared_res=``: each call then reads the
-    cached, pre-encoded, co-located frame instead of re-scanning +
-    re-encoding + re-shuffling the points table — per-call point-side
-    work drops to a cache scan.  At cluster scale the same layout is a
-    bucketed/partitioned TABLE (write once, serve every panel).
-
-    The CALLER owns the cache lifetime (``.unpersist()`` when done) —
-    an operator-internal cache would leak past the call (cache.py
-    discipline).  -> (neighbor_id, plon, plat, pcell) persisted."""
-    from lazyosm_spark.operators.spatial_join import repartition_by_cell
-
-    p = points.select(
-        F.col("point_id").alias("neighbor_id"),
-        F.col("lon").alias("plon"),
-        F.col("lat").alias("plat"),
-    ).withColumn("pcell", cell_encode("plon", "plat", res))
-    n = n_partitions or points.sparkSession.sparkContext.defaultParallelism
-    out = repartition_by_cell(p, "pcell", n).persist()
-    # stamp the encoding resolution so grid_knn's drift probe is a
-    # no-op for frames produced here (the probe only fires on frames
-    # assembled by hand or on a wrong prepared_res)
-    out._lazyosm_prepared_res = res
-    return out
-
-
 def grid_knn(
     queries: DataFrame,
     points: DataFrame,
     k: int,
     res: int | None = None,
-    start_ring: int = 1,
-    level_step: int = 2,
-    target_candidates: int | None = None,
     n_points: int | None = None,
     n_queries: int | None = None,
-    broadcast_rows: int = 4_000_000,
-    explode_broadcast_rows: int | None = None,
-    compact_points_rows: int = 100_000_000,
     materialize: bool = True,
-    points_prepared: DataFrame | None = None,
-    prepared_res: int | None = None,
 ) -> DataFrame:
     """queries(query_id, lon, lat) × points(point_id, lon, lat) ->
     exact (query_id, neighbor_id, rank, dist).
 
     ``res=None`` (default) picks the start resolution from point
-    density so the expected ring candidate count per query is about
-    ``target_candidates`` (default max(256, 48k)): the per-query window
-    top-k is the dominant cost and scales linearly with candidates, so
-    over-coarse cells waste a multiple of the whole runtime.  The
-    result is res-INVARIANT (exactness comes from the distance bound +
-    escalation), so this is pure plan tuning, like AQE picking
-    partition sizes from stats.  ``n_points`` skips the density count
-    job when the caller already knows it (repeat-call fast path).
+    density (pick_res): the per-query window top-k is the dominant cost
+    and scales linearly with candidates, so over-coarse cells waste a
+    multiple of the whole runtime.  The result is res-INVARIANT
+    (exactness comes from the distance bound + escalation), so this is
+    pure plan tuning, like AQE picking partition sizes from stats.
+    ``n_points`` skips the density count job when the caller already
+    knows it.
 
-    Levels: resolution res, res-level_step, ... down to the first
+    Levels: resolution res, res-LEVEL_STEP, ... down to the first
     resolution whose grid the ring fully covers (the provably-exact
     terminal level).  No cross join at any level — the plan-audit
     (tools/explain_plans.py) asserts no CartesianProduct node.
@@ -153,7 +138,7 @@ def grid_knn(
     Join-side dispatch: whenever the pending count is KNOWN (the
     ``n_queries`` hint at level 0 — no count job is added for unhinted
     callers — and the emptiness probe's count() at every later level)
-    and pending x ring_cells <= ``broadcast_rows``, the query side is
+    and pending x ring_cells <= BROADCAST_ROWS, the query side is
     broadcast and the points table is only SCANNED, never shuffled.
     This matters twice: at level 0 a small-panel query set turns the
     whole level into one scan + one candidate shuffle, and at
@@ -163,21 +148,21 @@ def grid_knn(
     (huge query panels) both sides shuffle on the cell key, the
     all-pairs-safe plan.
 
-    WHICH side explodes depends on the pending size
-    (``explode_broadcast_rows``, guide §3.1: a broadcast hash relation
-    is built SERIALLY, ~2.5 us/row on this box, so a big exploded panel
-    turns into seconds of single-thread build time).  The default
-    (None) balances the two serial-equivalent costs: the ring build is
-    ~2.5 us x pending x ring_cells on ONE thread, the stream explode
-    adds ~3 extra probe rows per POINT spread over every core, so the
-    crossover sits near 3 x n_points / parallelism exploded rows
-    (131072 when n_points is unknown):
+    WHICH side explodes depends on the pending size (guide §3.1: a
+    broadcast hash relation is built SERIALLY, ~2.5 us/row on this box,
+    so a big exploded panel turns into seconds of single-thread build
+    time).  The crossover balances the two serial-equivalent costs: the
+    ring build is ~2.5 us x pending x ring_cells on ONE thread, the
+    stream explode adds ~3 extra probe rows per POINT spread over every
+    core, so it sits near 3 x n_points / parallelism exploded rows
+    (floored at EXPLODE_BROADCAST_MIN; twice that when n_points is
+    unknown):
 
-    - small pending (pending x ring_cells <= explode_broadcast_rows):
-      explode pending to its (2*ring+1)^2 ring cells at res_l and
-      broadcast that — the points side streams with ONE probe per
-      point, candidates are exactly the ring candidates.
-    - large pending (above the threshold, level 0 of a big panel):
+    - small pending (pending x ring_cells <= crossover): explode
+      pending to its (2*RING+1)^2 ring cells at res_l and broadcast
+      that — the points side streams with ONE probe per point,
+      candidates are exactly the ring candidates.
+    - large pending (above the crossover, level 0 of a big panel):
       broadcast pending UN-EXPLODED keyed by its single res_l - 1 cell
       and explode the POINT side to its <= 4 ring-covering parent cells
       (cells.ring_parent_cover).  The build side shrinks ring_cells x
@@ -198,16 +183,21 @@ def grid_knn(
     limit-probe re-executes the upstream plan under AQE): an
     UNDERSTATED hint — e.g. a stale value reused across calls while the
     panel grew — broadcasts an exploded frame of the panel's TRUE size
-    x ring_cells, a memory hazard well past ``broadcast_rows``.  Pass
-    the exact panel count or nothing; a missing hint only costs the
-    shuffle plan at level 0, never correctness.
+    x ring_cells, a memory hazard well past BROADCAST_ROWS.  Pass the
+    exact panel count or nothing; a missing hint only costs the shuffle
+    plan at level 0, never correctness.
 
-    ``compact_points_rows`` gates COMPACT MODE (see the inline comment):
-    a known-small points table is round-robin repartitioned to core
-    count, so probe stages are not capped at the source's parquet
+    COMPACT MODE (see the inline comment): a known-small points table
+    (n_points <= COMPACT_POINTS_ROWS) is round-robin repartitioned to
+    core count, so probe stages are not capped at the source's parquet
     row-group parallelism (guide §2.5 input skew).  Points above the
-    threshold — the 100 TB shape — are never shuffled, exactly as
-    before.
+    threshold — the 100 TB shape — are never shuffled.
+
+    Every call scans and encodes its points table; there is no
+    repeat-call path.  A caller serving many panels against one points
+    table can persist that frame itself; how much of the removed
+    prepared-points path's saving (1.2 s against 2.35 s cold per call
+    at sf0.1 on 32 cores, BENCH_r06.json) that recovers is unmeasured.
 
     ``materialize=True`` (default) eagerly localCheckpoints the final
     union and unpersists every per-level cache, so a finished call
@@ -215,58 +205,12 @@ def grid_knn(
     getPersistentRDDs); pass False to get the lazy ladder plan (for
     plan audits / further composition) — then the per-level caches stay
     alive as long as the returned plan does.
-
-    ``points_prepared``/``prepared_res`` is the REPEAT-CALL fast path:
-    a ``prepare_points(points, res)`` frame (pre-encoded, co-located,
-    persisted).  Levels at ``prepared_res`` join it directly — no
-    point-side scan, encode, or exchange; other levels re-derive the
-    coarser cell from its cached lon/lat (identical expression, so the
-    result is provably unchanged).  With ``res=None`` the prepared
-    resolution is adopted and the density count job is skipped too.
     """
-    if points_prepared is not None:
-        if prepared_res is None:
-            raise ValueError("points_prepared requires prepared_res")
-        missing = {"neighbor_id", "plon", "plat", "pcell"} - set(points_prepared.columns)
-        if missing:
-            raise ValueError(f"points_prepared lacks columns {sorted(missing)}")
-        # cell ids embed their resolution: a stale prepared_res would
-        # join ZERO rows at the "fast" level and silently escalate the
-        # whole panel to the terminal level — exact but slower than the
-        # cold path.  One 1-row probe of the (persisted) frame catches
-        # the drift up front; the verdict is memoized on the frame
-        # OBJECT (prepare_points pre-stamps it), so repeat calls pay no
-        # probe job (~100 ms of pure task-dispatch overhead here).
-        if getattr(points_prepared, "_lazyosm_prepared_res", None) != prepared_res:
-            from lazyosm_spark.functions.cells import cell_res
-
-            probe = points_prepared.select(cell_res(F.col("pcell")).alias("r")).first()
-            if probe is not None and probe["r"] != prepared_res:
-                raise ValueError(
-                    f"points_prepared is encoded at res {probe['r']}, not "
-                    f"prepared_res={prepared_res}; re-run prepare_points"
-                )
-            points_prepared._lazyosm_prepared_res = prepared_res
     if res is None:
-        if prepared_res is not None:
-            res = prepared_res
-        else:
-            if n_points is None:
-                n_points = points.count()  # also enables compact mode
-            res = pick_res(n_points, k, start_ring, target_candidates)
-    # ids keep their INPUT type: numeric ids sort/shuffle cheaper than
-    # their string casts in the top-k window; callers needing string
-    # tie-break semantics (e.g. the DuckDB-oracle twins) pre-cast.
-    q = queries.select(
-        F.col("query_id"),
-        F.col("lon").alias("qlon"),
-        F.col("lat").alias("qlat"),
-    )
-    p = points.select(
-        F.col("point_id").alias("neighbor_id"),
-        F.col("lon").alias("plon"),
-        F.col("lat").alias("plat"),
-    )
+        if n_points is None:
+            n_points = points.count()  # also enables compact mode
+        res = pick_res(n_points, k)
+    q, p = _sides(queries, points)
     # COMPACT MODE (guide §2.5 input skew): a source whose files carry
     # few parquet row groups caps every level's probe stage at
     # row-group parallelism (measured: sf1 lineitem has 6 row groups,
@@ -274,15 +218,11 @@ def grid_knn(
     # 0.28s, q100 5.1s).  When the point count is KNOWN and small
     # enough that one shuffle is cheap, round-robin repartition the
     # 3-column projection; the probe then runs core-wide off the
-    # exchange.  At 10^12 points (n_points > compact_points_rows, or
+    # exchange.  At 10^12 points (n_points > COMPACT_POINTS_ROWS, or
     # unknown) the points table is NEVER shuffled — the original
     # streaming plan.
     dp = points.sparkSession.sparkContext.defaultParallelism
-    if (
-        points_prepared is None
-        and n_points is not None
-        and 0 < n_points <= compact_points_rows
-    ):
+    if n_points is not None and 0 < n_points <= COMPACT_POINTS_ROWS:
         # NOT persisted (r6 A/B): with the pick_res default the ladder
         # is single-level in the common case, so the repartitioned
         # frame is consumed exactly once — caching it cost a fill pass
@@ -291,12 +231,11 @@ def grid_knn(
         # re-runs scan+exchange, which is correct and cheaper than
         # paying the cache on every call.
         p = p.repartition(dp)
-    if explode_broadcast_rows is None:
-        explode_broadcast_rows = (
-            max(65_536, 3 * n_points // max(dp, 1))
-            if n_points is not None
-            else 131_072
-        )
+    explode_rows = (
+        max(EXPLODE_BROADCAST_MIN, 3 * n_points // max(dp, 1))
+        if n_points is not None
+        else 2 * EXPLODE_BROADCAST_MIN
+    )
 
     # resolution ladder: stop at the first level the ring fully covers
     # (Chebyshev radius >= grid_dim - 1 -> every cell is in the ring)
@@ -305,9 +244,9 @@ def grid_knn(
     while True:
         r = max(r, 0)
         levels.append(r)
-        if (1 << r) - 1 <= start_ring or r == 0:
+        if (1 << r) - 1 <= RING or r == 0:
             break
-        r -= level_step
+        r -= LEVEL_STEP
 
     pending = q
     # No extra count job for unhinted callers: level 0 broadcasts only
@@ -316,24 +255,19 @@ def grid_knn(
     # case (re-shuffling the full points table for a few stragglers)
     # is avoided either way.
     n_pending = n_queries  # None = unknown -> shuffle plan at level 0
-    ring_cells = (2 * start_ring + 1) ** 2
+    ring_cells = (2 * RING + 1) ** 2
     done_parts: list[DataFrame] = []
     prev_pending: DataFrame | None = None  # persisted nxt superseded per level
     wq = Window.partitionBy("query_id")
     for i, res_l in enumerate(levels):
         is_final = i == len(levels) - 1
         cell_h = 180.0 / (1 << res_l)  # lat extent of a cell (tighter bound)
-        guarantee = float(start_ring * cell_h)
+        guarantee = float(RING * cell_h)
         stream_explode = (
             res_l >= 1
             and n_pending is not None
-            and n_pending * ring_cells > explode_broadcast_rows
-            and n_pending <= broadcast_rows
-        )
-        base_p = (
-            points_prepared.select("neighbor_id", "plon", "plat")
-            if points_prepared is not None
-            else p
+            and n_pending * ring_cells > explode_rows
+            and n_pending <= BROADCAST_ROWS
         )
         if stream_explode:
             # big-panel plan: broadcast pending un-exploded (single
@@ -346,13 +280,11 @@ def grid_knn(
                 "qlat",
                 cell_encode("qlon", "qlat", res_l - 1).alias("pcell"),
             )
-            pl = base_p.select(
+            pl = p.select(
                 "neighbor_id",
                 "plon",
                 "plat",
-                F.explode(
-                    ring_parent_cover("plon", "plat", res_l, start_ring)
-                ).alias("pcell"),
+                F.explode(ring_parent_cover("plon", "plat", res_l, RING)).alias("pcell"),
             )
             cand = pl.join(F.broadcast(qside), "pcell")
         else:
@@ -360,28 +292,13 @@ def grid_knn(
                 "query_id",
                 "qlon",
                 "qlat",
-                F.explode(
-                    k_ring(cell_encode("qlon", "qlat", res_l), start_ring)
-                ).alias("pcell"),
+                F.explode(k_ring(cell_encode("qlon", "qlat", res_l), RING)).alias("pcell"),
             )
-            if n_pending is not None and n_pending * ring_cells <= broadcast_rows:
+            if n_pending is not None and n_pending * ring_cells <= BROADCAST_ROWS:
                 exploded = F.broadcast(exploded)
-            if points_prepared is not None and res_l == prepared_res:
-                pl = points_prepared  # cached, pre-encoded, co-located
-            else:
-                # coarser level / cold path: encode at res_l (off the
-                # cached frame when prepared — scan serves from memory)
-                pl = base_p.withColumn(
-                    "pcell", cell_encode("plon", "plat", res_l)
-                )
+            pl = p.withColumn("pcell", cell_encode("plon", "plat", res_l))
             cand = exploded.join(pl, "pcell")
-        cand = cand.select(
-            "query_id",
-            "neighbor_id",
-            F.sqrt(
-                _dist2(F.col("qlon"), F.col("qlat"), F.col("plon"), F.col("plat"))
-            ).alias("dist"),
-        )
+        cand = _with_dist(cand)
         # Non-final levels: a query retires iff its rank-k distance over
         # ALL ring candidates is <= guarantee — which holds iff it has
         # >= k candidates WITHIN guarantee, and then its top-k over just
@@ -457,24 +374,8 @@ def grid_knn(
 def knn_brute(queries: DataFrame, points: DataFrame, k: int) -> DataFrame:
     """Reference-quality brute force (the oracle shape): cross join +
     window top-k.  Use only for verification / tiny query sets."""
-    q = queries.select(
-        F.col("query_id"),
-        F.col("lon").alias("qlon"),
-        F.col("lat").alias("qlat"),
-    )
-    p = points.select(
-        F.col("point_id").alias("neighbor_id"),
-        F.col("lon").alias("plon"),
-        F.col("lat").alias("plat"),
-    )
-    cand = q.crossJoin(p).select(
-        "query_id",
-        "neighbor_id",
-        F.sqrt(_dist2(F.col("qlon"), F.col("qlat"), F.col("plon"), F.col("plat"))).alias(
-            "dist"
-        ),
-    )
-    return _topk(cand, k)
+    q, p = _sides(queries, points)
+    return _topk(_with_dist(q.crossJoin(p)), k)
 
 
 def phash_hamming_knn(
@@ -483,8 +384,6 @@ def phash_hamming_knn(
     k: int,
     id_col: str = "image_id",
     hash_col: str = "phash",
-    radii: tuple[int, ...] = (2, 6, 14, 30, 62),
-    fallback_salt: int = 32,
     materialize: bool = True,
 ) -> DataFrame:
     """EXACT top-k by 64-bit Hamming distance with NO cross join — the
@@ -497,12 +396,12 @@ def phash_hamming_knn(
     dedup._simhash_blocks) and equi-join per band.  Candidates within
     r are COMPLETE, so a query whose rank-k candidate has dist <= r is
     exact and retires; the rest escalate to a larger radius (more,
-    narrower bands).  Queries still pending after the last radius
-    (kth neighbor differs in > radii[-1] of 64 bits — genuinely
+    narrower bands).  Queries still pending after the last radius in
+    RADII (kth neighbor differs in > RADII[-1] of 64 bits — genuinely
     exhaustive territory) finish on a salted equi-join: items get
-    pmod(xxhash64(id), salt), queries replicate over the salt values —
-    a shuffled hash/SMJ plan, never a BroadcastNestedLoopJoin or
-    CartesianProduct node (plan-audited).
+    pmod(xxhash64(id), FALLBACK_SALT), queries replicate over the salt
+    values — a shuffled hash/SMJ plan, never a BroadcastNestedLoopJoin
+    or CartesianProduct node (plan-audited).
 
     Arithmetic-shift note: F.shiftright sign-extends, but masking to
     the block width keeps the true bit field, so the sign bit (bit 63)
@@ -519,9 +418,6 @@ def phash_hamming_knn(
     it = items.select(
         F.col(id_col).alias("neighbor_id"), F.col(hash_col).alias("nhash")
     ).persist()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
     wq = Window.partitionBy("query_id")
 
     def banded(df: DataFrame, hcol: str, blocks) -> DataFrame:
@@ -542,10 +438,11 @@ def phash_hamming_knn(
             ).alias("b"),
         ).select(*df.columns, F.col("b.block").alias("block"), F.col("b.key").alias("key"))
 
-    def topk(cand: DataFrame) -> DataFrame:
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+    def hamming(joined: DataFrame) -> DataFrame:
+        return joined.filter(F.col("neighbor_id") != F.col("query_id")).select(
+            "query_id",
+            "neighbor_id",
+            F.bit_count(F.col("qhash").bitwiseXOR(F.col("nhash"))).cast("long").alias("dist"),
         )
 
     pending = queries.select(
@@ -554,26 +451,16 @@ def phash_hamming_knn(
     parts: list[DataFrame] = []
     exhausted = True
     prev_pending: DataFrame | None = None  # persisted nxt superseded per level
-    for r in radii:
+    for r in RADII:
         blocks = _simhash_blocks(64, r + 1)
-        cand = (
-            banded(pending, "qhash", blocks)
-            .join(banded(it, "nhash", blocks), ["block", "key"])
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.bit_count(F.col("qhash").bitwiseXOR(F.col("nhash")))
-                .cast("long")
-                .alias("dist"),
-            )
-            .distinct()  # a pair can share several bands
-        )
+        cand = hamming(
+            banded(pending, "qhash", blocks).join(banded(it, "nhash", blocks), ["block", "key"])
+        ).distinct()  # a pair can share several bands
         # accept a query iff its rank-k dist <= r: candidates within r
         # are complete by pigeonhole, so that top-k is provably exact
         kth = F.max(F.when(F.col("rank") == k, F.col("dist"))).over(wq)
         ok = (
-            topk(cand)
+            _topk(cand, k)
             .withColumn("kth", kth)
             .filter(F.col("kth") <= r)
             .select("query_id", "neighbor_id", "rank", "dist")
@@ -598,24 +485,13 @@ def phash_hamming_knn(
     if exhausted:
         # salted exact fallback for the (normally empty) residue
         ib = it.withColumn(
-            "jk", F.pmod(F.xxhash64("neighbor_id"), F.lit(fallback_salt)).cast("int")
+            "jk", F.pmod(F.xxhash64("neighbor_id"), F.lit(FALLBACK_SALT)).cast("int")
         )
         qb = pending.select(
             "*",
-            F.explode(F.array(*[F.lit(i) for i in range(fallback_salt)])).alias("jk"),
+            F.explode(F.array(*[F.lit(i) for i in range(FALLBACK_SALT)])).alias("jk"),
         )
-        cand = (
-            qb.join(ib, "jk")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.bit_count(F.col("qhash").bitwiseXOR(F.col("nhash")))
-                .cast("long")
-                .alias("dist"),
-            )
-        )
-        parts.append(topk(cand).select("query_id", "neighbor_id", "rank", "dist"))
+        parts.append(_topk(hamming(qb.join(ib, "jk")), k))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -137,7 +137,7 @@ def duplicate_spans(
     emits n_tokens; lineage/catalog stats work too) so the second pass
     reads a two-column frame instead of re-running the tokenizer —
     the same caller-hint pattern as bloom_semi_join(n_keys=) and
-    grid_knn(points_prepared=).
+    grid_knn(n_points=).
     """
     if span_len < 1:
         raise ValueError(f"span_len must be >= 1, got {span_len}")

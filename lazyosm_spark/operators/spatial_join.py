@@ -21,9 +21,7 @@ is the engine's answer to the reference's LRU-thrash Limit override
 (nodemap.go:156-158).
 
 At 10^12 points the coarse join shuffles |points| × |resolutions| rows;
-keep the tile pyramid to the 2-3 resolutions that bound tile sizes, and
-pre-repartition points by cell with ``repartition_by_cell`` so repeated
-joins reuse the partitioning.
+keep the tile pyramid to the 2-3 resolutions that bound tile sizes.
 """
 
 from __future__ import annotations
@@ -368,10 +366,3 @@ def raster_to_boxes(raster: DataFrame, grid: int = 8, min_count: int = 1) -> Dat
     return raster.filter(F.col("n_points") >= min_count).select(
         "tile_id", "resolution", "gx", "gy", "n_points", ring.alias("ring")
     )
-
-
-def repartition_by_cell(df: DataFrame, cell_col: str, n: int) -> DataFrame:
-    """Range-partition on cell id — co-locates spatially adjacent data
-    (Z-order-ish locality), the shuffle-reuse analog of the reference's
-    greedy block path (shortest_path.go:99-281, SURVEY.md §4)."""
-    return df.repartitionByRange(n, F.col(cell_col))

@@ -18,8 +18,8 @@ Production path: `spark-submit --packages
 org.apache.iceberg:iceberg-spark-runtime-3.5_2.12:<ver>` and replace
 CheckpointedPipeline's writes with `.writeTo(tbl).append()` — the
 lineage columns map onto Iceberg's per-file metrics and the snapshot
-log onto its snapshot metadata; resume-by-anti-join maps onto reading
-the last committed snapshot.
+log onto its snapshot metadata; resuming by skipping recorded buckets
+maps onto reading the last committed snapshot.
 """
 
 from __future__ import annotations

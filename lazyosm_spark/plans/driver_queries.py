@@ -1444,44 +1444,20 @@ def _current_round() -> int:
     return _CURRENT_ROUND
 
 
-# Queries that have never had a driver-green CORRECTNESS row (added
-# this round) go FIRST regardless of rotation parity — the cap must
-# not push a brand-new operator's first value check off the round.
-# Prune entries once their row lands.
-_PRIORITY_NEW = [
-    "bpe_tokenize",
-    "bpe_tokenize_pack",
-    "pii_scrub",
-    "corpus_pii_filter",
-    "fx_stream_tokenize_pack",
-    "token_span_dedup",
-    "repetition_stats",
-    "corpus_repetition_filter",
-    "decontaminate",
-    "phash_near_pairs",
-    "image_dedup_components",
-    "word_counts",
-    "fx_stream_decontaminate",
-    "corpus_span_filter",
-]
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry in driver priority order.  The driver's correctness run
-    caps at ~50 of the ~74 registered queries, so ordering decides who
-    gets a driver-green row this round: never-green queries first
-    (_PRIORITY_NEW), then on ODD rounds the redundant
+    caps at ~50 of the registered queries, so ordering decides who
+    gets a driver-green row this round: on ODD rounds the redundant
     twins go LAST (every family's scale-shaped variant inside the cap —
     the round-3 layout); on EVEN rounds they go FIRST, so every query
     gets a driver-green CORRECTNESS row at least every other round
-    (round-3 verdict item 6).  All ~69 stay registered and are
+    (round-3 verdict item 6).  All stay registered and are
     value-checked locally via tools/compare_driver.py regardless."""
     merged = dict(QUERIES)
     merged.update(FIXTURE_QUERIES)
-    new = [n for n in _PRIORITY_NEW if n in merged]
-    twins = [n for n in _REDUNDANT_TWINS if n in merged and n not in new]
-    rest = [n for n in merged if n not in twins and n not in new]
-    order = new + (rest + twins if _current_round() % 2 == 1 else twins + rest)
+    twins = [n for n in _REDUNDANT_TWINS if n in merged]
+    rest = [n for n in merged if n not in twins]
+    order = rest + twins if _current_round() % 2 == 1 else twins + rest
     return {n: merged[n] for n in order}
 
 

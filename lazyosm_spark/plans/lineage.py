@@ -11,7 +11,7 @@ swap _write_meta to `.writeTo(...).append()`).
 
 Layout under <root>/:
     data/<stage>/bucket=<b>/*.parquet      stage output, bucketed by key
-    _lineage/<stage>.parquet               per-bucket lineage rows
+    _lineage/<stage>/*.parquet             per-bucket lineage rows
     _snapshots.jsonl                       append-only snapshot log
 
 Lineage row: (stage, bucket, row_count, checksum, key_min, key_max).
@@ -35,29 +35,32 @@ def _bucket(key_col: str, n: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
 
 
+def _bucket_stats(df: DataFrame, cols: list[str], key_col: str | None = None) -> DataFrame:
+    """(bucket, row_count, checksum[, key_min, key_max]) per ``bucket``
+    of ``df``; the checksum covers ``cols``."""
+    aggs = [
+        F.count("*").alias("row_count"),
+        F.expr("bit_xor(xxhash64(struct({})))".format(", ".join(cols))).alias("checksum"),
+    ]
+    if key_col is not None:
+        aggs += [F.min(key_col).alias("key_min"), F.max(key_col).alias("key_max")]
+    return df.groupBy("bucket").agg(*aggs)
+
+
 def lineage_of(df: DataFrame, stage: str, key_col: str, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Per-bucket lineage: counts + order-insensitive checksum + key
     zone map (the engine-visible analog of the reference's per-block
     IdRange catalog, primitiveblock.go:72-79)."""
-    all_cols = [F.col(c) for c in df.columns]
     return (
-        df.withColumn("bucket", _bucket(key_col, n_buckets))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("row_count"),
-            F.expr(
-                "bit_xor(xxhash64(struct({}))) ".format(", ".join(df.columns))
-            ).alias("checksum"),
-            F.min(key_col).alias("key_min"),
-            F.max(key_col).alias("key_max"),
-        )
+        _bucket_stats(df.withColumn("bucket", _bucket(key_col, n_buckets)), df.columns, key_col)
         .withColumn("stage", F.lit(stage))
         .select("stage", "bucket", "row_count", "checksum", "key_min", "key_max")
     )
 
 
 class CheckpointedPipeline:
-    """Stage-by-stage execution with resume-by-anti-join.
+    """Stage-by-stage execution; a resumed stage skips the buckets its
+    lineage already records.
 
     run_stage(stage, input_df, transform, key_col):
       - bucket the TRANSFORMED output by key,
@@ -78,12 +81,17 @@ class CheckpointedPipeline:
     def _data_path(self, stage: str) -> str:
         return os.path.join(self.root, "data", stage)
 
-    def completed_buckets(self, stage: str) -> DataFrame:
+    def _recorded(self, stage: str) -> DataFrame | None:
+        """The stage's committed lineage table, or None before its first
+        commit (an existence check, not a failed read)."""
         path = self._lineage_path(stage)
-        try:
-            return self.spark.read.parquet(path).select("bucket").distinct()
-        except Exception:
+        return self.spark.read.parquet(path) if os.path.exists(path) else None
+
+    def completed_buckets(self, stage: str) -> DataFrame:
+        recorded = self._recorded(stage)
+        if recorded is None:
             return self.spark.range(0).select(F.col("id").cast("int").alias("bucket"))
+        return recorded.select("bucket").distinct()
 
     def run_stage(
         self,
@@ -96,33 +104,25 @@ class CheckpointedPipeline:
         new) read back from the checkpoint."""
         from pyspark.storagelevel import StorageLevel
 
+        # the committed (bucket, row_count) rows: at most n_buckets, read
+        # to the driver once — they give the pending filter and, with the
+        # new rows, the snapshot record
+        recorded = self._recorded(stage)
+        done_rows = [] if recorded is None else recorded.select("bucket", "row_count").collect()
+        done = sorted({r["bucket"] for r in done_rows})
         bucketed = output_df.withColumn("bucket", _bucket(key_col, self.n_buckets))
-        done = self.completed_buckets(stage)
+        if done:
+            bucketed = bucketed.filter(~F.col("bucket").isin(done))
         # persist: the stage output feeds the lineage aggregation AND the
         # data write — without this the upstream plan (e.g. an expensive
         # decode) recomputes per action (measured 2.2x wall inflation)
-        pending = bucketed.join(done, "bucket", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        pending = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
 
         # job 1: lineage aggregation — tiny result (<= n_buckets rows),
         # collected to the driver; doubles as the "any pending?" probe.
         # (NB: a limit(1).count() probe executes the ENTIRE upstream
         # plan under AQE — measured as expensive as the full decode.)
-        lineage_rows = (
-            pending.groupBy("bucket")
-            .agg(
-                F.count("*").alias("row_count"),
-                F.expr(
-                    "bit_xor(xxhash64(struct({})))".format(
-                        ", ".join(c for c in output_df.columns)
-                    )
-                ).alias("checksum"),
-                F.min(key_col).alias("key_min"),
-                F.max(key_col).alias("key_max"),
-            )
-            .collect()
-        )
+        lineage_rows = _bucket_stats(pending, output_df.columns, key_col).collect()
         if lineage_rows:
             # job 2 (cache-served): co-locate each bucket into one task
             # BEFORE the partitioned write — otherwise every task writes
@@ -147,7 +147,7 @@ class CheckpointedPipeline:
                 .withColumn("commit_seq", F.lit(commit_seq))
             )
             lineage.write.mode("append").parquet(self._lineage_path(stage))
-            self._log_snapshot(stage, commit_seq)
+            self._log_snapshot(stage, commit_seq, done_rows + lineage_rows)
         pending.unpersist()
         return self.spark.read.parquet(self._data_path(stage)).drop("bucket")
 
@@ -160,16 +160,14 @@ class CheckpointedPipeline:
         with open(path) as f:
             return sum(1 for line in f if json.loads(line)["stage"] == stage)
 
-    def _log_snapshot(self, stage: str, commit_seq: int) -> None:
-        lin = self.spark.read.parquet(self._lineage_path(stage))
-        agg = lin.agg(
-            F.count("*").alias("n_buckets"), F.sum("row_count").alias("rows")
-        ).first()
+    def _log_snapshot(self, stage: str, commit_seq: int, committed: list) -> None:
+        """Append the snapshot record; ``committed`` holds every lineage
+        row of the stage after this commit (recorded + new)."""
         rec = {
             "stage": stage,
             "commit_seq": commit_seq,
-            "n_buckets": int(agg["n_buckets"]),
-            "rows": int(agg["rows"]),
+            "n_buckets": len(committed),
+            "rows": sum(int(r["row_count"]) for r in committed),
             "ts": time.time(),
         }
         with open(os.path.join(self.root, "_snapshots.jsonl"), "a") as f:
@@ -179,16 +177,7 @@ class CheckpointedPipeline:
         """Re-derive lineage from checkpointed data and compare — the
         'no duplicate partitions on resume' gate."""
         data = self.spark.read.parquet(self._data_path(stage))
-        cols = [c for c in data.columns if c != "bucket"]
-        rederived = (
-            data.groupBy("bucket")
-            .agg(
-                F.count("*").alias("row_count"),
-                F.expr(
-                    "bit_xor(xxhash64(struct({})))".format(", ".join(cols))
-                ).alias("checksum"),
-            )
-        )
+        rederived = _bucket_stats(data, [c for c in data.columns if c != "bucket"])
         recorded = self.spark.read.parquet(self._lineage_path(stage)).select(
             "bucket", "row_count", "checksum"
         )

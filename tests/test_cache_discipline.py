@@ -12,13 +12,19 @@ leak is directly observable as a rising count.
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
 from lazyosm_spark.cache import n_persistent_rdds
 
+_JOB_GROUPS = itertools.count()
+
 SF = "/root/testdata/sf0.001"
 TILE_POINTS_SHUFFLE_JOBS = 4
+GRID_KNN_HINTED_JOBS = 9
+RUN_STAGE_JOBS = (7, 10, 5)  # fresh, half-resumed, no-op
 
 
 def _delta(spark, fn) -> int:
@@ -106,7 +112,7 @@ def test_shingle_pair_operators_leave_no_cache(spark, op):
 def _jobs_in_call(spark, fn) -> int:
     """Jobs that ``fn`` runs, counted through a job group of its own."""
     sc = spark.sparkContext
-    key, group = "spark.jobGroup.id", "jobs-budget"
+    key, group = "spark.jobGroup.id", f"jobs-budget-{next(_JOB_GROUPS)}"
     prev = sc.getLocalProperty(key)
     sc.setLocalProperty(key, group)
     try:
@@ -138,3 +144,57 @@ def test_tile_points_shuffle_jobs_budget_and_no_residue(spark, fx):
     assert n_jobs == TILE_POINTS_SHUFFLE_JOBS
     assert _cache_manager_empty(spark)
     assert n_persistent_rdds(spark) == base
+
+
+def _r2_points(n: int) -> list[tuple[str, float, float]]:
+    """R2 low-discrepancy points over the lon/lat plane."""
+    return [
+        (f"p{i}", -180.0 + 360.0 * ((i * 0.7548776662466927) % 1.0),
+         -85.0 + 170.0 * ((i * 0.5698402909980532) % 1.0))
+        for i in range(n)
+    ]
+
+
+def test_grid_knn_hinted_jobs_budget_and_no_residue(spark):
+    """A grid_knn call given both size hints, frame build plus collect,
+    runs GRID_KNN_HINTED_JOBS jobs; it leaves CacheManager empty and at
+    most the one persistent RDD backing its result."""
+    from lazyosm_spark.operators.knn import grid_knn
+
+    pts = spark.createDataFrame(_r2_points(2000), "point_id string, lon double, lat double")
+    q = pts.limit(50).selectExpr("point_id as query_id", "lon", "lat")
+    spark.catalog.clearCache()
+    base = n_persistent_rdds(spark)
+    n_jobs = _jobs_in_call(
+        spark, lambda: grid_knn(q, pts, k=5, n_points=2000, n_queries=50).collect()
+    )
+    assert n_jobs == GRID_KNN_HINTED_JOBS
+    assert _cache_manager_empty(spark)
+    assert n_persistent_rdds(spark) - base <= 1
+
+
+def test_run_stage_jobs_budget(spark, tmp_path):
+    """CheckpointedPipeline.run_stage on a 20k-row, 64-bucket stage runs
+    RUN_STAGE_JOBS jobs fresh (half the buckets), resuming the other
+    half, and as a no-op re-run; the snapshot log records each commit's
+    whole-stage bucket and row totals."""
+    import json
+
+    from lazyosm_spark.plans.lineage import CheckpointedPipeline
+
+    pipe = CheckpointedPipeline(spark, str(tmp_path), n_buckets=64)
+    df = spark.range(20_000).select(F.col("id").alias("k"), (F.col("id") * 7 % 97).alias("v"))
+    half = df.filter(F.pmod(F.xxhash64("k"), F.lit(64)).cast("int") < 32)
+    n_half = half.count()
+    jobs = tuple(
+        _jobs_in_call(spark, lambda d=d: pipe.run_stage("s", d, key_col="k"))
+        for d in (half, df, df)
+    )
+    assert jobs == RUN_STAGE_JOBS
+    with open(tmp_path / "_snapshots.jsonl") as f:
+        recs = [json.loads(line) for line in f]
+    assert [(r["commit_seq"], r["n_buckets"], r["rows"]) for r in recs] == [
+        (0, 32, n_half),
+        (1, 64, 20_000),
+    ]
+    assert pipe.verify_stage("s")

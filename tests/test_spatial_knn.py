@@ -344,31 +344,41 @@ def test_grid_knn_equals_bruteforce(spark):
     assert got == want
 
 
-def test_grid_knn_stream_explode_identical(spark):
+def test_grid_knn_stream_explode_identical(spark, monkeypatch):
     """The big-panel plan (pending broadcast un-exploded at res-1,
     POINTS exploded to ring_parent_cover — r6 optimization) must be
     bit-identical to the exploded-pending plan and to brute force:
     the candidate superset argument in grid_knn's docstring, pinned."""
-    from lazyosm_spark.operators.knn import grid_knn, knn_brute
+    from lazyosm_spark.operators import knn
 
     pts = _points(400)
     pdf = spark.createDataFrame(pts, "point_id string, lon double, lat double")
     q = spark.createDataFrame(
         pts[:60], "query_id string, lon double, lat double"
     )
-    kw = dict(k=5, n_points=400, n_queries=60)
-    # explode_broadcast_rows=0 forces stream-explode at every level >= 1
-    got = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["dist"])
-        for r in grid_knn(q, pdf, explode_broadcast_rows=0, **kw).collect()
-    }
-    legacy = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["dist"])
-        for r in grid_knn(q, pdf, explode_broadcast_rows=1 << 40, **kw).collect()
-    }
+    covers = []
+    cover = knn.ring_parent_cover
+    monkeypatch.setattr(
+        knn, "ring_parent_cover", lambda *a: covers.append(a) or cover(*a)
+    )
+
+    def run(explode_min: int) -> dict:
+        # the crossover is max(EXPLODE_BROADCAST_MIN, 3 * n_points / dp):
+        # 0 puts it at 3 * 400 / dp < 60 x 9 pending rows on >= 3 cores
+        # (stream-explode at every level >= 1), 1 << 40 above any panel
+        monkeypatch.setattr(knn, "EXPLODE_BROADCAST_MIN", explode_min)
+        covers.clear()
+        out = knn.grid_knn(q, pdf, k=5, n_points=400, n_queries=60).collect()
+        return {(r["query_id"], r["rank"]): (r["neighbor_id"], r["dist"]) for r in out}
+
+    assert spark.sparkContext.defaultParallelism >= 3
+    got = run(0)
+    assert covers, "EXPLODE_BROADCAST_MIN=0 did not take the stream-explode plan"
+    legacy = run(1 << 40)
+    assert not covers, "EXPLODE_BROADCAST_MIN=1<<40 took the stream-explode plan"
     brute = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["dist"])
-        for r in knn_brute(q, pdf, k=5).collect()
+        for r in knn.knn_brute(q, pdf, k=5).collect()
     }
     assert got == legacy == brute
 
@@ -475,18 +485,18 @@ def test_phash_hamming_knn_equals_brute(spark):
     assert got == want and len(got) == 50_000
 
 
-def test_phash_hamming_knn_fallback_exact(spark):
+def test_phash_hamming_knn_fallback_exact(spark, monkeypatch):
     """Queries whose kth neighbor is beyond the last radius finish on
     the salted equi-join fallback — still exact."""
-    from pyspark.sql import functions as F
-
+    from lazyosm_spark.operators import knn
     from lazyosm_spark.operators.knn import phash_hamming_knn, phash_hamming_topk
 
     rows = [("a", 0), ("b", -1), ("c", 0x0F0F0F0F0F0F0F0F), ("d", 3)]
     df = spark.createDataFrame(rows, "image_id string, phash long")
+    monkeypatch.setattr(knn, "RADII", (2,))
     got = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["dist"])
-        for r in phash_hamming_knn(df, df, k=3, radii=(2,)).collect()
+        for r in phash_hamming_knn(df, df, k=3).collect()
     }
     want = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["dist"])
@@ -529,69 +539,3 @@ def test_cell_bounds_roundtrip(spark):
     ).filter(~F.col("ok"))
     assert bad.count() == 0
 
-
-def test_grid_knn_prepared_points_identical(spark):
-    """The prepare_points repeat-call fast path returns exactly the
-    cold path's result — at the prepared resolution, at a different
-    explicit resolution (coarser re-derive off the cache), and under
-    escalation — and validates its inputs."""
-    from lazyosm_spark.operators.knn import grid_knn, pick_res, prepare_points
-
-    pts = _points(400)
-    pdf = spark.createDataFrame(pts, "point_id string, lon double, lat double")
-    q = spark.createDataFrame(
-        [(pid, lon, lat) for pid, lon, lat in pts[:25]],
-        "query_id string, lon double, lat double",
-    )
-    res = pick_res(400, 5)
-    prep = prepare_points(pdf, res)
-    try:
-        cold = sorted(map(tuple, grid_knn(q, pdf, k=5).collect()))
-        fast = sorted(
-            map(
-                tuple,
-                grid_knn(
-                    q, pdf, k=5, points_prepared=prep, prepared_res=res
-                ).collect(),
-            )
-        )
-        assert fast == cold and len(fast) > 0
-        # explicit res != prepared_res: coarser cells re-derived from
-        # the cached lon/lat — still identical
-        other = sorted(
-            map(
-                tuple,
-                grid_knn(
-                    q,
-                    pdf,
-                    k=5,
-                    res=max(res - 1, 0),
-                    points_prepared=prep,
-                    prepared_res=res,
-                ).collect(),
-            )
-        )
-        base = sorted(map(tuple, grid_knn(q, pdf, k=5, res=max(res - 1, 0)).collect()))
-        assert other == base
-    finally:
-        prep.unpersist()
-    try:
-        grid_knn(q, pdf, k=5, points_prepared=prep)
-        raise AssertionError("expected ValueError without prepared_res")
-    except ValueError:
-        pass
-    try:
-        grid_knn(q, pdf, k=5, points_prepared=pdf, prepared_res=res)
-        raise AssertionError("expected ValueError for missing columns")
-    except ValueError:
-        pass
-    # resolution drift: the frame is stamped/probed, a wrong
-    # prepared_res must raise instead of silently joining zero rows
-    prep2 = prepare_points(pdf, res)
-    try:
-        grid_knn(q, pdf, k=5, points_prepared=prep2, prepared_res=res + 1)
-        raise AssertionError("expected ValueError for res drift")
-    except ValueError:
-        pass
-    finally:
-        prep2.unpersist()
