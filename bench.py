@@ -7,8 +7,15 @@ Prints ONE JSON line:
 The headline metric is the flagship spatial join's wall time — points
 derived deterministically from lineitem rows (the largest table) tiled
 against the fixture tile pyramid — plus representative operators from
-each SURVEY §2 family.  Throughput extras (rows/sec) ride along for
-BENCH/BASELINE.md.
+each SURVEY §2 family (``headline()``).  Extras ride along: every
+query's walls, the spatial join's points/s and memberships, and the
+skew section (q8), which gates tile_points_shuffle's task spread
+against a grouped reference plan.
+
+Scale is the path: ``python tools/gen_sf.py`` builds the 10x sf0.1
+replica in ``.bench_sf1`` (its defaults), then run
+``SPARK_GRAFT_SF_DIR=.bench_sf1 python bench.py``;
+``tools/explain_plans.py`` gates the headline plans at the same path.
 """
 
 from __future__ import annotations
@@ -41,9 +48,9 @@ def lineitem_points(spark, sf_dir):
 
 def knn_panel(spark, sf_dir):
     """R2 low-discrepancy query panel (one query per part row) — the
-    ONE construction shared by every grid_knn bench site (bench.py,
-    run_sf1); a typo'd constant in a stray copy would
-    silently bench a different panel."""
+    ONE construction behind the grid_knn headline entry and its plan
+    gate; a typo'd constant in a stray copy would silently bench a
+    different panel."""
     from pyspark.sql import functions as F
 
     part = spark.read.parquet(os.path.join(sf_dir, "part.parquet"))
@@ -128,13 +135,47 @@ def grouped_refine_reference(points, tiles):
     )
 
 
+def headline(spark, sf_dir):
+    """The 7 headline queries at ``sf_dir``: name -> zero-arg callable
+    returning the query's DataFrame.  The counts behind the size hints
+    (points, tiles, panel) run here, once, so no timed call pays for
+    them.  bench.py times each entry; tools/explain_plans.py gates
+    each entry's physical plan."""
+    from lazyosm_spark.operators.knn import grid_knn
+    from lazyosm_spark.operators.spatial_join import tile_points
+    from lazyosm_spark.plans import driver_queries as dq
+    from lazyosm_spark.sources.fixtures import gen_tiles
+
+    pts = lineitem_points(spark, sf_dir)
+    n_points = pts.count()
+    tiles = spark.createDataFrame(gen_tiles())
+    n_tiles = tiles.count()
+    panel = knn_panel(spark, sf_dir)
+    n_queries = panel.count()
+    return {
+        # flagship spatial join (coarse cell join + PIP refine)
+        "spatial_join": lambda: tile_points(pts, tiles, salt=4, n_tiles=n_tiles),
+        # TPC-H Q1 aggregation
+        "tpch1_pricing": lambda: dq.QUERIES["tpch1_pricing"](spark, sf_dir),
+        # the J1 workhorse join + ordered assembly
+        "way_node_assembly": lambda: dq.QUERIES["way_node_assembly"](spark, sf_dir),
+        # prefix-sum window (delta decode analog)
+        "cumsum_window": lambda: dq.QUERIES["cumsum_window"](spark, sf_dir),
+        # part-derived queries vs lineitem-derived points; auto res
+        "grid_knn": lambda: grid_knn(
+            panel, pts, k=5, n_points=n_points, n_queries=n_queries
+        ),
+        # minhash LSH dedup pipeline over documents
+        "minhash_lsh": lambda: dq.FIXTURE_QUERIES["fx_minhash_lsh_pairs"](spark, sf_dir),
+        # cosine top-k over embeddings
+        "cosine_topk": lambda: dq.QUERIES["cosine_topk"](spark, sf_dir),
+    }
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
     from lazyosm_spark import get_spark
-    from lazyosm_spark.operators.knn import grid_knn
-    from lazyosm_spark.operators.spatial_join import tile_points
-    from lazyosm_spark.plans import driver_queries as dq
     from lazyosm_spark.sources.fixtures import gen_tiles
 
     spark = get_spark(
@@ -173,53 +214,15 @@ def main() -> None:
         )
         return n, dt
 
-    # warm the JVM + parquet footers once
+    # the points/s extra's denominator and the skew section's input
     pts = lineitem_points(spark, SF_DIR)
     n_points = pts.count()
-    tiles = spark.createDataFrame(gen_tiles())
-    n_tiles = tiles.count()
 
-    # q1: flagship spatial join (coarse cell join + PIP refine);
-    # n_tiles hint: the dispatch probe job stays out of the timing
-    n_mem, dt = timed(
-        "spatial_join",
-        lambda: tile_points(pts, tiles, salt=4, n_tiles=n_tiles).count(),
-    )
-    extras["spatial_join_points_per_sec"] = round(n_points / dt, 1)
-    extras["spatial_join_memberships"] = n_mem
-
-    # q2: TPC-H Q1 aggregation
-    timed("tpch1_pricing", lambda: dq.QUERIES["tpch1_pricing"](spark, SF_DIR).count())
-
-    # q3: the J1 workhorse join + ordered assembly
-    timed(
-        "way_node_assembly",
-        lambda: dq.QUERIES["way_node_assembly"](spark, SF_DIR).count(),
-    )
-
-    # q4: prefix-sum window (delta decode analog)
-    timed("cumsum_window", lambda: dq.QUERIES["cumsum_window"](spark, SF_DIR).count())
-
-    # q5: grid kNN (part-derived queries vs lineitem-derived points)
-    def knn_run():
-        # auto res from density; n_points/n_queries hints skip the
-        # dispatch count jobs
-        return grid_knn(
-            knn_panel(spark, SF_DIR), pts, k=5, n_points=n_points, n_queries=n_queries_knn
-        ).count()
-
-    part_bench = spark.read.parquet(os.path.join(SF_DIR, "part.parquet"))
-    n_queries_knn = part_bench.count()
-    timed("grid_knn", knn_run)
-
-    # q6: minhash LSH dedup pipeline over documents
-    timed(
-        "minhash_lsh",
-        lambda: dq.FIXTURE_QUERIES["fx_minhash_lsh_pairs"](spark, SF_DIR).count(),
-    )
-
-    # q7: cosine top-k over embeddings
-    timed("cosine_topk", lambda: dq.QUERIES["cosine_topk"](spark, SF_DIR).count())
+    for name, query in headline(spark, SF_DIR).items():
+        n, dt = timed(name, lambda: query().count())
+        if name == "spatial_join":
+            extras["spatial_join_points_per_sec"] = round(n_points / dt, 1)
+            extras["spatial_join_memberships"] = n
 
     # q8: SKEW world — one hot "city-center" tile (SURVEY §4: the
     # engine's answer to the reference's LRU-thrash Limit).  ~35% of all
@@ -232,6 +235,7 @@ def main() -> None:
     from lazyosm_spark.operators.spatial_join import tile_points_shuffle
 
     tiles_pdf = gen_tiles()
+    tiles = spark.createDataFrame(tiles_pdf)
     hot = tiles_pdf[tiles_pdf["resolution"] == 3].iloc[0]
     hres = int(hot["resolution"])
     hx = (int(hot["tile_id"]) >> 29) & ((1 << 29) - 1)

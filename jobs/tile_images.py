@@ -25,8 +25,8 @@ so a kill mid-run resumes without duplicate work):
   5. per-tile rollup (counts + distinct phash sketch) joined with the
      decode features
 
-Prints one JSON line with wall time + throughput — consumed by
-BENCH/run_scaling.py for the N-vs-4N parallelism evidence.
+Prints one JSON line with wall time + throughput.  The N-vs-4N
+parallelism evidence measured on it is history in BENCH/BASELINE.md.
 """
 
 from __future__ import annotations

@@ -169,37 +169,6 @@ def ring_parent_cover(lon, lat, res: int, ring: int) -> Column:
     )
 
 
-def ring_shell(cell, k: int) -> Column:
-    """Only the cells at exactly Chebyshev distance ``k`` (ring k shell)."""
-    if k == 0:
-        return F.array(_lit(cell))
-    res = cell_res(cell)
-    n = cell_nx(res)
-    x, y = cell_x(cell), cell_y(cell)
-    cand = F.flatten(
-        F.transform(
-            F.sequence(F.lit(-k), F.lit(k)),
-            lambda dx: F.transform(
-                F.sequence(F.lit(-k), F.lit(k)),
-                lambda dy: F.struct(
-                    (x + dx).alias("x"),
-                    (y + dy).alias("y"),
-                    F.greatest(F.abs(dx), F.abs(dy)).alias("d"),
-                ),
-            ),
-        )
-    )
-    valid = F.filter(
-        cand,
-        lambda c: (c["d"] == k)
-        & (c["x"] >= 0)
-        & (c["x"] < n)
-        & (c["y"] >= 0)
-        & (c["y"] < n),
-    )
-    return F.transform(valid, lambda c: pack_cell(c["x"], c["y"], res))
-
-
 def cover_bbox(lon_min, lat_min, lon_max, lat_max, res) -> Column:
     """Array of cells covering a bbox at ``res`` (polygon/footprint cover).
 

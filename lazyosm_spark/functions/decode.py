@@ -57,20 +57,6 @@ def delta_decode(deltas: pd.Series) -> pd.Series:
     return _flat_cumsum(deltas)
 
 
-def delta_decode_window(delta_col: str, part_col: str, order_col: str) -> Column:
-    """Cross-row framing of the same prefix sum, as a window — used when
-    deltas arrive one-per-row instead of packed in arrays; also the
-    shape the DuckDB oracle checks (SUM ... OVER)."""
-    from pyspark.sql import Window as W
-
-    w = (
-        W.partitionBy(part_col)
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    return F.sum(delta_col).over(w)
-
-
 def zigzag_decode(col) -> Column:
     """(v >> 1) ^ -(v & 1) — signed zigzag, pure JVM bitwise."""
     c = col if isinstance(col, Column) else F.col(col)
@@ -120,12 +106,6 @@ def round_ref_sql(expr: str, places: int = 6) -> str:
         f"((CASE WHEN ({d} - trunc({d})) >= 0.5 THEN ceil({d}) "
         f"ELSE floor({d}) END) / {p})"
     )
-
-
-def is_closed_ring(refs_col) -> Column:
-    """first ref == last ref (process.go:59-63, ring_logic.go:74-77)."""
-    c = refs_col if isinstance(refs_col, Column) else F.col(refs_col)
-    return F.element_at(c, 1) == F.element_at(c, -1)
 
 
 def lookup_stringtable(idx_array, stringtable) -> Column:

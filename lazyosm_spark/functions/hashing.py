@@ -41,10 +41,6 @@ def hamming64(a, b) -> Column:
     return F.bit_count(ca.cast("long").bitwiseXOR(cb.cast("long")))
 
 
-def hamming64_sql(a: str, b: str) -> str:
-    return f"bit_count(xor(CAST({a} AS BIGINT), CAST({b} AS BIGINT)))"
-
-
 def shingles(text_col, n: int = 3) -> Column:
     """Word n-gram shingles of a text column (JVM-side: split + transform).
 

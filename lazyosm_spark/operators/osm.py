@@ -117,32 +117,20 @@ def decode_relations(relations_encoded: DataFrame) -> DataFrame:
 # ------------------------------------------------------- way geometry ----
 
 
-def way_lines(ways: DataFrame, nodes: DataFrame, strict: bool = False) -> DataFrame:
+def way_lines(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """The workhorse J1 join: way refs -> ordered coordinate lists.
 
     -> (id, tags, line array<array<double>>, is_closed)
     Missing node refs drop the ref (inner join), matching the
-    reference's skip-on-missing (nodemap.go:89-102 returns empty);
-    ``strict=True`` fails the job on any dangling ref instead
-    (P6 strict mode: assert_true on the outer-join null side).
+    reference's skip-on-missing (nodemap.go:89-102 returns empty).
     """
     exploded = ways.select("id", "tags", F.posexplode("refs").alias("pos", "ref"))
     coords = nodes.select(
         F.col("id").alias("ref"), "lon", "lat"
     )
-    if strict:
-        # assert_true must live in a FILTER — as a dropped projection
-        # column Catalyst prunes it away and the check never runs
-        joined = exploded.join(coords, "ref", "left").filter(
-            F.assert_true(
-                F.col("lon").isNotNull(),
-                F.concat(F.lit("dangling node ref "), F.col("ref")),
-            ).isNull()
-        )
-    else:
-        joined = exploded.join(coords, "ref", "inner")
     return (
-        joined.groupBy("id")
+        exploded.join(coords, "ref", "inner")
+        .groupBy("id")
         .agg(
             F.first("tags").alias("tags"),
             F.transform(

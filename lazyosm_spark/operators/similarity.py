@@ -34,11 +34,6 @@ def _norm(a):
     )
 
 
-def with_unit_vec(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return df.withColumn("_unit", F.transform(v, lambda x: x / _norm(v)))
-
-
 def cosine_topk(
     items: DataFrame,
     queries: DataFrame,

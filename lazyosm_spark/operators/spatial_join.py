@@ -200,35 +200,6 @@ def tile_points_shuffle(
     )
 
 
-def tile_points_coarse(
-    points: DataFrame,
-    tiles: DataFrame,
-    point_id: str = "point_id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """Coarse phase only (cell equi-join, no PIP) — exact when tile
-    rings ARE their cell bboxes; also the SQL-oracle-checkable layer."""
-    res_list = sorted(
-        int(r[0]) for r in tiles.select("resolution").distinct().collect()
-    )
-    pts = points.select(
-        F.col(point_id).cast("string").alias("point_id"),
-        F.col(lon).alias("lon"),
-        F.col(lat).alias("lat"),
-    )
-    cells = pts.select(
-        "point_id",
-        F.explode(
-            F.array(*[cell_encode(F.col("lon"), F.col("lat"), r) for r in res_list])
-        ).alias("cell"),
-    )
-    return cells.join(
-        tiles.select(F.col("tile_id").alias("cell"), "tile_id", "resolution"),
-        "cell",
-    ).select("point_id", "tile_id", "resolution")
-
-
 def polyfill(
     tiles: DataFrame,
     res_col=None,

@@ -33,8 +33,6 @@ blobs back to feature rows for round-trip verification.
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 
@@ -291,25 +289,4 @@ def geobuf_sink(features, precision: int = 7):
 
     return features.select("osm_id", "geom_type", "coords", "properties").mapInPandas(
         enc, GEOBUF_SCHEMA
-    )
-
-
-def geojson_of_decoded(feature: dict) -> str:
-    """Decoded geobuf feature -> the engine's GeoJSON string layout
-    (operators/osm.features_to_geojson) for content comparison."""
-    c = feature["coords"]
-    gt = feature["geom_type"]
-    if gt == "Point":
-        coords = c[0][0][0]
-    elif gt == "LineString":
-        coords = c[0][0]
-    elif gt == "Polygon":
-        coords = c[0]
-    else:
-        coords = c
-    return (
-        '{"type":"Feature","geometry":{"type":"' + gt + '","coordinates":'
-        + json.dumps(coords, separators=(",", ":"))
-        + '},"properties":' + json.dumps(feature["properties"], separators=(",", ":"), sort_keys=True)
-        + ',"id":' + str(feature["osm_id"]) + "}"
     )

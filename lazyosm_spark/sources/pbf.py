@@ -54,10 +54,6 @@ def encode_varints(vals) -> bytes:
     return bytes(out)
 
 
-def zigzag_encode_py(v: int) -> int:
-    return (v << 1) ^ (v >> 63) if v >= 0 else ((v << 1) ^ -1) & ((1 << 64) - 1) | 1
-
-
 def encode_svarints(vals) -> bytes:
     zz = [(int(v) << 1) ^ (int(v) >> 63) for v in vals]
     zz = [z & ((1 << 64) - 1) for z in zz]
@@ -633,60 +629,27 @@ def read_pbf(spark, path_glob: str):
     wire parse + vectorized varint decode in mapInPandas, emitting the
     engine's encoded-block schemas.  Compose with operators/osm.decode_*
     for logical entities and feature assembly."""
+    from pyspark.sql.types import StructType
+
     files = spark.read.format("binaryFile").load(path_glob).select("path", "content")
 
-    def parse_nodes(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rows.extend(parse_pbf_bytes(bytes(r.content), str(r.path))[0])
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "block_id", "ids_delta", "lon_delta", "lat_delta",
-                    "keys_vals", "stringtable", "min_id", "max_id", "has_tags",
-                    "granularity", "lat_offset", "lon_offset",
-                ],
-            )
+    def parse(index: int, schema: str):
+        """One output of parse_pbf_bytes (0 nodes, 1 ways, 2 relations,
+        3 header) as a frame; the pandas columns are the schema's."""
+        columns = StructType.fromDDL(schema).names
 
-    def parse_headers(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rows.extend(parse_pbf_bytes(bytes(r.content), str(r.path))[3])
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "bbox_w", "bbox_s", "bbox_e", "bbox_n",
-                    "required_features", "optional_features", "writing_program",
-                    "source", "replication_ts", "replication_seq",
-                    "replication_url",
-                ],
-            )
+        def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in it:
+                rows = []
+                for r in pdf.itertuples(index=False):
+                    rows.extend(parse_pbf_bytes(bytes(r.content), str(r.path))[index])
+                yield pd.DataFrame(rows, columns=columns)
 
-    def parse_ways(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rows.extend(parse_pbf_bytes(bytes(r.content))[1])
-            yield pd.DataFrame(
-                rows,
-                columns=["block_id", "id", "refs_delta", "keys", "vals", "stringtable"],
-            )
-
-    def parse_rels(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rows.extend(parse_pbf_bytes(bytes(r.content))[2])
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "memids_delta", "roles", "member_types", "tags"],
-            )
+        return files.mapInPandas(run, schema)
 
     return {
-        "nodes_encoded": files.mapInPandas(parse_nodes, NODE_BLOCK_SCHEMA),
-        "ways_encoded": files.mapInPandas(parse_ways, WAY_BLOCK_SCHEMA),
-        "relations_encoded": files.mapInPandas(parse_rels, REL_BLOCK_SCHEMA),
-        "header": files.mapInPandas(parse_headers, HEADER_SCHEMA),
+        "nodes_encoded": parse(0, NODE_BLOCK_SCHEMA),
+        "ways_encoded": parse(1, WAY_BLOCK_SCHEMA),
+        "relations_encoded": parse(2, REL_BLOCK_SCHEMA),
+        "header": parse(3, HEADER_SCHEMA),
     }

@@ -1,10 +1,20 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import lazyosm_spark  # noqa: E402
+
+# the suite must test the checkout it lives in, not an installed or
+# sibling copy that happens to come first on sys.path
+assert os.path.abspath(lazyosm_spark.__file__).startswith(ROOT + os.sep), (
+    f"lazyosm_spark imported from {lazyosm_spark.__file__}, outside {ROOT}"
+)
 
 
 @pytest.fixture(scope="session")

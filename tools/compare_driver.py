@@ -7,6 +7,7 @@ Usage: python tools/compare_driver.py [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -14,7 +15,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [

@@ -3,7 +3,9 @@ and assert the scale-critical properties (predicate pushdown, column
 pruning, broadcast joins, whole-stage codegen, no superfluous shuffle).
 
 Writes docs/PLANS.md.  Run after operator changes: a correct-but-
-mis-planned operator is a scale bug (SURVEY.md §4).
+mis-planned operator is a scale bug (SURVEY.md §4).  The last sections
+gate bench.headline()'s plans at $SPARK_GRAFT_SF_DIR (default sf0.01);
+point it at a tools/gen_sf.py replica for the sf1 gate.
 """
 
 from __future__ import annotations
@@ -70,6 +72,44 @@ def map_side_refine_checks(plan: str) -> list[tuple[str, bool]]:
         ("PIP refine is an ArrowEvalPython Filter over the join output",
          pip is not None and pip + 1 < len(above) and "Filter" in above[pip + 1]),
     ]
+
+
+def headline_gate(spark, sf_dir) -> list[tuple[str, str, list[tuple[str, bool]]]]:
+    """One audit section per bench.headline() entry at ``sf_dir``:
+    CartesianProduct is banned everywhere, and BroadcastNestedLoopJoin
+    everywhere except cosine_topk, whose crossJoin(broadcast(10-row
+    panel)) is the documented exact small-panel baseline (the items
+    side is scanned, never shuffled).  Run it at a 10x replica to catch
+    a plan that only flips at a bigger input."""
+    import bench
+    from lazyosm_spark.operators.knn import grid_knn
+
+    sections = []
+    for name, query in bench.headline(spark, sf_dir).items():
+        if name == "grid_knn":
+            # calling the entry runs the ladder and checkpoints its
+            # result (a plain RDD scan); the lazy ladder on a 256-row
+            # panel slice, with the full panel's hints, plans the same
+            # shape.  It persists per-level frames, dropped below.
+            pts, panel = bench.lineitem_points(spark, sf_dir), bench.knn_panel(spark, sf_dir)
+            df = grid_knn(panel.limit(256), pts, k=5, n_points=pts.count(),
+                          n_queries=panel.count(), materialize=False)
+        else:
+            df = query()
+        p = plan_of(df)
+        checks = [("no CartesianProduct node anywhere", "CartesianProduct" not in p)]
+        if name != "cosine_topk":
+            checks.append(("no BroadcastNestedLoopJoin", "BroadcastNestedLoopJoin" not in p))
+        sections.append((f"headline {name} ({os.path.basename(sf_dir.rstrip('/'))})", p, checks))
+    spark.catalog.clearCache()
+    return sections
+
+
+def masked(plan: str) -> str:
+    """The plan text with Spark's session-global counters (plan ids and
+    expression ids) masked, so one section's plans do not renumber the
+    next section's text; every check reads the raw plan."""
+    return re.sub(r"#\d+", "#…", re.sub(r"plan_id=\d+", "plan_id=…", plan))
 
 
 def main() -> None:
@@ -306,6 +346,9 @@ def main() -> None:
     ]
     sections.append(("contamination (eval-span broadcast, no content shuffle)", p, checks))
 
+    # 13. the headline plan gate (bench.headline entries)
+    sections.extend(headline_gate(spark, SF_DIR))
+
     ok = True
     lines = ["# Physical-plan audit (generated by tools/explain_plans.py)\n"]
     for name, plan, checks in sections:
@@ -315,7 +358,7 @@ def main() -> None:
             mark = "PASS" if passed else "FAIL"
             lines.append(f"- [{mark}] {desc}")
             print(f"{mark}  {name}: {desc}")
-        lines.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
+        lines.append("\n```\n" + masked(plan.strip())[:4000] + "\n```\n")
     os.makedirs("docs", exist_ok=True)
     with open("docs/PLANS.md", "w") as f:
         f.write("\n".join(lines))
