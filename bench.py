@@ -1,5 +1,5 @@
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on local[session.DEFAULT_CPUS].
 
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -26,9 +26,9 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from lazyosm_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def lineitem_points(spark, sf_dir):

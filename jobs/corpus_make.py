@@ -34,6 +34,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from lazyosm_spark.session import DEFAULT_CPUS  # noqa: E402
 
 
 def run_pipeline(
@@ -127,7 +128,7 @@ def main() -> None:
     ap.add_argument("--min-quality", type=float, default=0.25)
     ap.add_argument("--langs", default="en,de,fr")
     ap.add_argument("--max-pii", type=int, default=3)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     ap.add_argument("--buckets", type=int, default=64, help="lineage bucket count (resume granularity)")
     args = ap.parse_args()
 

@@ -22,6 +22,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from lazyosm_spark.session import DEFAULT_CPUS  # noqa: E402
 
 
 def main() -> None:
@@ -29,7 +30,7 @@ def main() -> None:
     ap.add_argument("-f", "--input", required=True, help=".osm.pbf path/glob")
     ap.add_argument("-o", "--output", required=True)
     ap.add_argument("--format", choices=["parquet", "geojson", "geobuf"], default="parquet")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     args = ap.parse_args()
 
     from lazyosm_spark import get_spark

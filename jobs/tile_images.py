@@ -38,6 +38,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from lazyosm_spark.session import DEFAULT_CPUS  # noqa: E402
 
 
 def main() -> None:
@@ -47,7 +48,7 @@ def main() -> None:
     ap.add_argument("--n-images", type=int, default=200_000)
     ap.add_argument("--img-size-mult", type=int, default=1)
     ap.add_argument("--output", default=None)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--buckets", type=int, default=64, help="lineage bucket count (resume granularity)")
     ap.add_argument("--max-partition-mb", type=int, default=16,

@@ -1,4 +1,4 @@
-"""Entity decode transforms: delta / zigzag / dictionary / coordinate scaling.
+"""Entity decode transforms: delta / zigzag / dictionary.
 
 Re-expresses the reference's hand-rolled decoders as Spark columnar
 transforms (SURVEY.md §2.8, §2.5 W1):
@@ -9,15 +9,11 @@ transforms (SURVEY.md §2.8, §2.5 W1):
 - zigzag decode — reference uses murphy214/pbf ``ReadSVarint``
 - interleaved ``[k,v,...,0]`` tag unpack — ``densenode.go:46-79``
 - stringtable (dictionary) lookup — ``process.go:105-113``
-- coordinate scaling ``1e-9*(offset + granularity*q)`` —
-  ``process.go:136-137``, ``densenode.go:137-140``
 - round half-away-from-zero to 6 dp — ``relation_handler.go:25-41``
   (applied ONLY to relation ring coords, not ways/nodes)
-- closed-ring test — ``process.go:59-63``
 
 Arrays stay intra-row, so the prefix sum is a vectorized Arrow batch
-op (one np.cumsum over the flattened batch), not a shuffle — the
-cross-row window variant is also provided for SQL-oracle parity.
+op (one np.cumsum over the flattened batch), not a shuffle.
 """
 
 from __future__ import annotations
@@ -27,9 +23,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-GRANULARITY = 100  # default, osmformat defaults (SURVEY.md §1.1)
-COORD_SCALE = 1e-9
 
 
 def _flat_cumsum(s: pd.Series) -> pd.Series:
@@ -68,14 +61,6 @@ def zigzag_encode(col) -> Column:
     c = col if isinstance(col, Column) else F.col(col)
     c = c.cast("long")
     return F.shiftleft(c, 1).bitwiseXOR(F.shiftright(c, 63))
-
-
-def scale_coord(q, granularity: int = GRANULARITY, offset: int = 0) -> Column:
-    """Quantized int -> degrees: 1e-9 * (offset + granularity * q)."""
-    c = q if isinstance(q, Column) else F.col(q)
-    return (F.lit(offset).cast("double") + F.lit(granularity) * c.cast("double")) * F.lit(
-        COORD_SCALE
-    )
 
 
 def round_ref(col, places: int = 6) -> Column:

@@ -18,8 +18,8 @@ The exploded way->node join is the heavy hitter; it shuffles
 O(sum(len(refs))) rows hashed on node id, which is exactly what the
 reference's greedy block-locality path (shortest_path.go:99-281)
 approximates single-node.  Block-level pruning (TagsBool, id zone maps)
-is expressed as parquet predicate pushdown on `has_tags` / min-max
-stats rather than a hand-built catalog.
+is a filter on the block rows' `has_tags` / min-max columns rather than
+a hand-built catalog.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from lazyosm_spark.functions.decode import (
     delta_decode,
-    scale_coord,
     tags_from_keys_vals,
     unpack_dense_tags,
 )
@@ -45,25 +44,24 @@ from lazyosm_spark.functions.geometry import (
 
 
 def decode_nodes(nodes_encoded: DataFrame, prune_tagless_blocks: bool = False) -> DataFrame:
-    """Block rows -> per-node rows (id, lon, lat, tags, block_id).
+    """Block rows (read_pbf's ``nodes_encoded``) -> per-node rows
+    (id, lon, lat, tags, block_id).
 
-    ``prune_tagless_blocks`` applies the TagsBool zone-map filter
-    (densenode.go:274-278 / process.go:283) BEFORE decode — with
-    parquet min/max stats on has_tags this prunes whole row groups.
+    ``prune_tagless_blocks`` applies the TagsBool block filter
+    (densenode.go:274-278 / process.go:283) BEFORE decode: blocks whose
+    has_tags is false are dropped without unpacking their arrays.
 
-    Honors per-block granularity / lat_offset / lon_offset columns when
-    the source carries them (PBF blocks, process.go:121-123,136-137:
-    deg = 1e-9 * (offset + granularity * q)); sources without the
-    columns (fixture tables) use the osmformat defaults 100/0/0.
+    Coordinates use each block's granularity / lat_offset / lon_offset
+    (process.go:121-123,136-137: deg = 1e-9 * (offset + granularity * q)).
     """
     df = nodes_encoded
     if prune_tagless_blocks:
         df = df.filter(F.col("has_tags"))
-    per_block = "granularity" in df.columns
-    gran_cols = ["granularity", "lat_offset", "lon_offset"] if per_block else []
     z = df.select(
         "block_id",
-        *gran_cols,
+        "granularity",
+        "lat_offset",
+        "lon_offset",
         F.explode(
             F.arrays_zip(
                 delta_decode("ids_delta").alias("id"),
@@ -73,19 +71,17 @@ def decode_nodes(nodes_encoded: DataFrame, prune_tagless_blocks: bool = False) -
             )
         ).alias("n"),
     )
-    if per_block:
-        scale = lambda q, off: (  # noqa: E731
-            off.cast("double") + F.col("granularity").cast("double") * q.cast("double")
+
+    def degrees(q: str, offset: str):
+        return (
+            F.col(offset).cast("double")
+            + F.col("granularity").cast("double") * F.col(q).cast("double")
         ) * F.lit(1e-9)
-        lon = scale(F.col("n.qlon"), F.col("lon_offset"))
-        lat = scale(F.col("n.qlat"), F.col("lat_offset"))
-    else:
-        lon = scale_coord(F.col("n.qlon"))
-        lat = scale_coord(F.col("n.qlat"))
+
     return z.select(
         F.col("n.id").alias("id"),
-        lon.alias("lon"),
-        lat.alias("lat"),
+        degrees("n.qlon", "lon_offset").alias("lon"),
+        degrees("n.qlat", "lat_offset").alias("lat"),
         F.col("n.tags").alias("tags"),
         "block_id",
     )

@@ -30,11 +30,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lazyosm_spark.plans.lineage import data_path, lineage_path, snapshot_log
+
 
 def snapshots(spark: SparkSession, root: str) -> DataFrame:
     """The append-only snapshot log as a DataFrame (one row per stage
     commit): (snapshot_id, stage, n_buckets, rows, ts)."""
-    path = os.path.join(root, "_snapshots.jsonl")
+    path = snapshot_log(root)
     rows = []
     if os.path.exists(path):
         with open(path) as f:
@@ -55,7 +57,7 @@ def snapshots(spark: SparkSession, root: str) -> DataFrame:
 def files(spark: SparkSession, root: str, stage: str) -> DataFrame:
     """Physical-file inventory of a stage (the tbl.files analog):
     (bucket, path, size_bytes)."""
-    base = os.path.join(root, "data", stage)
+    base = data_path(root, stage)
     rows = []
     if os.path.isdir(base):
         for bucket_dir in sorted(os.listdir(base)):
@@ -75,7 +77,7 @@ def files(spark: SparkSession, root: str, stage: str) -> DataFrame:
 def table_stats(spark: SparkSession, root: str, stage: str) -> DataFrame:
     """Per-bucket lineage (zone maps + checksums) — the manifests'
     column-stats analog, the basis of partition pruning and resume."""
-    return spark.read.parquet(os.path.join(root, "_lineage", stage))
+    return spark.read.parquet(lineage_path(root, stage))
 
 
 def read_stage(
@@ -87,7 +89,7 @@ def read_stage(
 
     Bucket-level time travel is exact for this engine because commits
     are whole-bucket appends (lineage row == commit unit)."""
-    df = spark.read.parquet(os.path.join(root, "data", stage))
+    df = spark.read.parquet(data_path(root, stage))
     if as_of_snapshot is None:
         return df.drop("bucket")
     snaps = snapshots(spark, root)
@@ -122,5 +124,5 @@ def prune_buckets(
     hit = lin.filter(
         (F.col("key_max") >= F.lit(key_min)) & (F.col("key_min") <= F.lit(key_max))
     ).select("bucket")
-    df = spark.read.parquet(os.path.join(root, "data", stage))
+    df = spark.read.parquet(data_path(root, stage))
     return df.join(hit, "bucket", "left_semi").drop("bucket")

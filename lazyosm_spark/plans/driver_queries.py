@@ -1864,29 +1864,16 @@ FROM {_golden('world_counts_small')}
 """,
 )
 def q_fx_pbf(spark, sf_dir):
-    """Real .osm.pbf wire-format ingest: world -> pbf shard -> scan ->
-    decode; returns per-kind entity counts (equality with the parquet
-    path is pytest-gated)."""
-    import tempfile
-
+    """Real .osm.pbf wire-format ingest: the fixture world's shard ->
+    scan -> decode; returns per-kind entity counts (pytest checks the
+    decoded entities against the world itself)."""
     from lazyosm_spark.operators.osm import decode_nodes, decode_ways
-    from lazyosm_spark.sources import pbf as pbf_mod
-    from lazyosm_spark.sources.fixtures import build_world
+    from lazyosm_spark.sources.fixtures import load_fixtures
 
-    world = build_world(_fixture_scale(sf_dir))
-    d = tempfile.mkdtemp(prefix="pbfq_")
-    import os as _os
-
-    pbf_mod.write_pbf_shard(
-        _os.path.join(d, "w.osm.pbf"),
-        nodes=world["nodes"],
-        ways=world["ways"],
-        relations=world["relations"],
-    )
-    enc = pbf_mod.read_pbf(spark, _os.path.join(d, "*.osm.pbf"))
-    n = decode_nodes(enc["nodes_encoded"]).count()
-    w = decode_ways(enc["ways_encoded"]).count()
-    r = enc["relations_encoded"].count()
+    fx = load_fixtures(spark, _fixture_scale(sf_dir))
+    n = decode_nodes(fx["nodes_encoded"]).count()
+    w = decode_ways(fx["ways_encoded"]).count()
+    r = fx["relations_encoded"].count()
     return spark.createDataFrame(
         [(int(n), int(w), int(r))], "n_nodes long, n_ways long, n_relations long"
     )

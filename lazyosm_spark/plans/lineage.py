@@ -31,6 +31,18 @@ from pyspark.sql import functions as F
 DEFAULT_BUCKETS = 64
 
 
+def data_path(root: str, stage: str) -> str:
+    return os.path.join(root, "data", stage)
+
+
+def lineage_path(root: str, stage: str) -> str:
+    return os.path.join(root, "_lineage", stage)
+
+
+def snapshot_log(root: str) -> str:
+    return os.path.join(root, "_snapshots.jsonl")
+
+
 def _bucket(key_col: str, n: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
 
@@ -75,16 +87,10 @@ class CheckpointedPipeline:
         self.n_buckets = n_buckets
         os.makedirs(root, exist_ok=True)
 
-    def _lineage_path(self, stage: str) -> str:
-        return os.path.join(self.root, "_lineage", stage)
-
-    def _data_path(self, stage: str) -> str:
-        return os.path.join(self.root, "data", stage)
-
     def _recorded(self, stage: str) -> DataFrame | None:
         """The stage's committed lineage table, or None before its first
         commit (an existence check, not a failed read)."""
-        path = self._lineage_path(stage)
+        path = lineage_path(self.root, stage)
         return self.spark.read.parquet(path) if os.path.exists(path) else None
 
     def completed_buckets(self, stage: str) -> DataFrame:
@@ -138,7 +144,7 @@ class CheckpointedPipeline:
                 .write.option("partitionOverwriteMode", "dynamic")
                 .mode("overwrite")
                 .partitionBy("bucket")
-                .parquet(self._data_path(stage))
+                .parquet(data_path(self.root, stage))
             )
             commit_seq = self._next_commit_seq(stage)
             lineage = (
@@ -146,15 +152,15 @@ class CheckpointedPipeline:
                 .withColumn("stage", F.lit(stage))
                 .withColumn("commit_seq", F.lit(commit_seq))
             )
-            lineage.write.mode("append").parquet(self._lineage_path(stage))
+            lineage.write.mode("append").parquet(lineage_path(self.root, stage))
             self._log_snapshot(stage, commit_seq, done_rows + lineage_rows)
         pending.unpersist()
-        return self.spark.read.parquet(self._data_path(stage)).drop("bucket")
+        return self.spark.read.parquet(data_path(self.root, stage)).drop("bucket")
 
     def _next_commit_seq(self, stage: str) -> int:
         """Commit ordinal per stage, derived from the snapshot log (the
         commit-order source of truth for time travel)."""
-        path = os.path.join(self.root, "_snapshots.jsonl")
+        path = snapshot_log(self.root)
         if not os.path.exists(path):
             return 0
         with open(path) as f:
@@ -170,15 +176,15 @@ class CheckpointedPipeline:
             "rows": sum(int(r["row_count"]) for r in committed),
             "ts": time.time(),
         }
-        with open(os.path.join(self.root, "_snapshots.jsonl"), "a") as f:
+        with open(snapshot_log(self.root), "a") as f:
             f.write(json.dumps(rec) + "\n")
 
     def verify_stage(self, stage: str) -> bool:
         """Re-derive lineage from checkpointed data and compare — the
         'no duplicate partitions on resume' gate."""
-        data = self.spark.read.parquet(self._data_path(stage))
+        data = self.spark.read.parquet(data_path(self.root, stage))
         rederived = _bucket_stats(data, [c for c in data.columns if c != "bucket"])
-        recorded = self.spark.read.parquet(self._lineage_path(stage)).select(
+        recorded = self.spark.read.parquet(lineage_path(self.root, stage)).select(
             "bucket", "row_count", "checksum"
         )
         return (

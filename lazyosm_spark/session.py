@@ -21,7 +21,9 @@ from pyspark.sql import SparkSession
 for _var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_var, "1")
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# every entry point's local[N]: $SPARK_GRAFT_CPUS, else the CPUs this
+# process may run on
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def engine_confs(shuffle_partitions: int) -> dict[str, str]:

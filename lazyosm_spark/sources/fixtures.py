@@ -1,28 +1,32 @@
 """Deterministic synthetic fixtures (seed=42) per FIXTURES.md.
 
 Generates the logical "world" first (decoded nodes/ways/relations with
-real ring geometry), then ENCODES it into the reference's physical shape
-(block-grouped delta arrays + per-block stringtable, mirroring
-osmformat.pb.go semantics — SURVEY.md §1) so the engine's decode
-transforms have real work to do.  Round-trip equality (decode(encode(w))
-== w) is itself a test.
+real ring geometry), then writes it as one real .osm.pbf shard
+(sources/pbf.write_pbf_shard: delta-coded DenseNodes / Ways / Relations
+blocks with per-block stringtables, SURVEY.md §1) that the engine reads
+back through sources/pbf.read_pbf, so the decode transforms have real
+work to do.  Round-trip equality (decode(read(write(w))) == w) is
+itself a test.
 
 All coordinates are generated as quantized ints (units of granularity
 100 nanodegrees → 1e-7 deg), so delta coding is exact.
 
-Scales: tiny (~10^2, unit tests), small (~10^4, pytest correctness),
-bench (~10^6, perf).  Written once to a cache dir, loaded as parquet.
+Scales: tiny (~10^2, unit tests), small (~10^4, pytest correctness).
+Written once to a cache dir: the shard plus parquet tables of the
+logical world, images and tiles.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
 
 from lazyosm_spark.sources.images import average_phash, encode_image, reference_pixels
+from lazyosm_spark.sources.pbf import read_pbf, write_pbf_shard
 
 SEED = 42
 # R2 low-discrepancy constants (1/x, 1/x^2 of the plastic number):
@@ -32,10 +36,10 @@ PHI = 0.7548776662466927
 PHI2 = 0.5698402909980532
 GRAN_DEG = 1e-7  # granularity 100 nanodeg
 
+# npb: entities per PBF block (nodes, ways and relations alike)
 SCALES = {
-    "tiny": dict(n_images=60, n_rel=8, n_ways=24, n_extra_nodes=400, npb=50, wpb=10),
-    "small": dict(n_images=600, n_rel=40, n_ways=150, n_extra_nodes=5000, npb=100, wpb=25),
-    "bench": dict(n_images=20000, n_rel=300, n_ways=1500, n_extra_nodes=100000, npb=8000, wpb=200),
+    "tiny": dict(n_images=60, n_rel=8, n_ways=24, n_extra_nodes=400, npb=50),
+    "small": dict(n_images=600, n_rel=40, n_ways=150, n_extra_nodes=5000, npb=100),
 }
 
 ADJ = ["quiet", "bright", "ancient", "mossy", "vast", "narrow", "golden"]
@@ -238,95 +242,6 @@ def build_world(scale: str = "small") -> dict[str, pd.DataFrame]:
     return {"nodes": nodes, "ways": ways, "relations": rels}
 
 
-# ------------------------------------------------------------- encode ----
-
-
-def encode_nodes(nodes: pd.DataFrame, npb: int) -> pd.DataFrame:
-    """Decoded nodes -> block rows with delta arrays + interleaved
-    keys_vals + per-block stringtable (DenseNodes analog)."""
-    nodes = nodes.sort_values("id").reset_index(drop=True)
-    rows = []
-    for b in range(0, len(nodes), npb):
-        blk = nodes.iloc[b : b + npb]
-        ids = blk["id"].to_numpy(np.int64)
-        qlon = blk["qlon"].to_numpy(np.int64)
-        qlat = blk["qlat"].to_numpy(np.int64)
-        st = [""]
-        stidx: dict[str, int] = {}
-
-        def sid(s: str) -> int:
-            if s not in stidx:
-                stidx[s] = len(st)
-                st.append(s)
-            return stidx[s]
-
-        kv = []
-        for tags in blk["tags"]:
-            for k, v in tags.items():
-                kv.append(sid(k))
-                kv.append(sid(v))
-            kv.append(0)
-        rows.append(
-            dict(
-                block_id=b // npb,
-                ids_delta=np.diff(ids, prepend=0).tolist(),
-                lon_delta=np.diff(qlon, prepend=0).tolist(),
-                lat_delta=np.diff(qlat, prepend=0).tolist(),
-                keys_vals=kv,
-                stringtable=st,
-                min_id=int(ids.min()),
-                max_id=int(ids.max()),
-                has_tags=bool(any(len(t) for t in blk["tags"])),
-            )
-        )
-    return pd.DataFrame(rows)
-
-
-def encode_ways(ways: pd.DataFrame, wpb: int) -> pd.DataFrame:
-    ways = ways.sort_values("id").reset_index(drop=True)
-    rows = []
-    for b in range(0, len(ways), wpb):
-        blk = ways.iloc[b : b + wpb]
-        st = [""]
-        stidx: dict[str, int] = {}
-
-        def sid(s: str) -> int:
-            if s not in stidx:
-                stidx[s] = len(st)
-                st.append(s)
-            return stidx[s]
-
-        for row in blk.itertuples(index=False):
-            refs = np.asarray(row.refs, dtype=np.int64)
-            rows.append(
-                dict(
-                    block_id=b // wpb,
-                    id=int(row.id),
-                    refs_delta=np.diff(refs, prepend=0).tolist(),
-                    keys=[sid(k) for k in row.tags],
-                    vals=[sid(v) for v in row.tags.values()],
-                    stringtable=st,
-                )
-            )
-    return pd.DataFrame(rows)
-
-
-def encode_relations(rels: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for row in rels.itertuples(index=False):
-        mem = np.asarray(row.memids, dtype=np.int64)
-        rows.append(
-            dict(
-                id=int(row.id),
-                memids_delta=np.diff(mem, prepend=0).tolist(),
-                roles=list(row.roles),
-                member_types=list(row.member_types),
-                tags=dict(row.tags),
-            )
-        )
-    return pd.DataFrame(rows)
-
-
 # -------------------------------------------------------------- images ----
 
 
@@ -413,14 +328,22 @@ def gen_tiles(n_per_res: int = 24) -> pd.DataFrame:
 # --------------------------------------------------------------- cache ----
 
 
-def fixtures_dir(scale: str = "small", base: str | None = None) -> str:
-    """Build-once parquet cache of all fixture tables for a scale."""
-    base = base or os.environ.get("LAZYOSM_FIXTURES", "/root/repo/.fixtures")
+ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+OSM_SHARD = "osm.osm.pbf"
+
+
+def fixtures_dir(scale: str = "small") -> str:
+    """Build-once cache of all fixture files for a scale, under
+    $LAZYOSM_FIXTURES or the checkout's .fixtures/.  A directory whose
+    _DONE marker has no OSM shard beside it (another layout, or an
+    interrupted build) is rebuilt from scratch."""
+    base = os.environ.get("LAZYOSM_FIXTURES", os.path.join(ROOT, ".fixtures"))
     path = os.path.join(base, scale)
     marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
+    if os.path.exists(marker) and os.path.exists(os.path.join(path, OSM_SHARD)):
         return path
-    os.makedirs(path, exist_ok=True)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
     cfg = SCALES[scale]
     world = build_world(scale)
     import pyarrow as pa
@@ -430,60 +353,30 @@ def fixtures_dir(scale: str = "small", base: str | None = None) -> str:
         tbl = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
         pq.write_table(tbl, os.path.join(path, f"{name}.parquet"))
 
-    nodes = world["nodes"]
-    write(
-        "nodes",
-        nodes[["id", "lon", "lat", "tags"]],
-        pa.schema(
-            [
-                ("id", pa.int64()),
-                ("lon", pa.float64()),
-                ("lat", pa.float64()),
-                ("tags", pa.map_(pa.string(), pa.string())),
-            ]
-        ),
-    )
-    write(
-        "ways",
-        world["ways"],
-        pa.schema(
-            [
-                ("id", pa.int64()),
-                ("refs", pa.list_(pa.int64())),
-                ("tags", pa.map_(pa.string(), pa.string())),
-            ]
-        ),
-    )
-    write(
-        "relations",
-        world["relations"],
-        pa.schema(
-            [
-                ("id", pa.int64()),
-                ("memids", pa.list_(pa.int64())),
-                ("roles", pa.list_(pa.string())),
-                ("member_types", pa.list_(pa.int32())),
-                ("tags", pa.map_(pa.string(), pa.string())),
-            ]
-        ),
-    )
-    write("nodes_encoded", encode_nodes(nodes, cfg["npb"]))
-    write("ways_encoded", encode_ways(world["ways"], cfg["wpb"]))
-    # explicit map schema: inferred pandas dicts become a struct of the
-    # union of keys, which poisons unions with the map-typed way/node
-    # feature tables (and diverges from pbf.REL_BLOCK_SCHEMA)
-    write(
-        "relations_encoded",
-        encode_relations(world["relations"]),
-        pa.schema(
-            [
-                ("id", pa.int64()),
-                ("memids_delta", pa.list_(pa.int64())),
-                ("roles", pa.list_(pa.string())),
-                ("member_types", pa.list_(pa.int32())),
-                ("tags", pa.map_(pa.string(), pa.string())),
-            ]
-        ),
+    # explicit map type for tags: pandas dicts would infer as structs
+    tags = pa.map_(pa.string(), pa.string())
+    ids = pa.list_(pa.int64())
+    world_schemas = {
+        "nodes": [("id", pa.int64()), ("lon", pa.float64()), ("lat", pa.float64()), ("tags", tags)],
+        "ways": [("id", pa.int64()), ("refs", ids), ("tags", tags)],
+        "relations": [
+            ("id", pa.int64()),
+            ("memids", ids),
+            ("roles", pa.list_(pa.string())),
+            ("member_types", pa.list_(pa.int32())),
+            ("tags", tags),
+        ],
+    }
+    for name, fields in world_schemas.items():
+        schema = pa.schema(fields)
+        write(name, world[name][schema.names], schema)
+    # nodes are the shard's first blocks, so node j lands in block j // npb
+    write_pbf_shard(
+        os.path.join(path, OSM_SHARD),
+        nodes=world["nodes"],
+        ways=world["ways"],
+        relations=world["relations"],
+        block_size=cfg["npb"],
     )
     write("images", gen_images(cfg["n_images"]))
     write("tiles", gen_tiles())
@@ -493,15 +386,14 @@ def fixtures_dir(scale: str = "small", base: str | None = None) -> str:
 
 
 def load_fixtures(spark, scale: str = "small") -> dict:
+    """The logical world, images and tiles as parquet frames, plus the
+    OSM shard's block frames (``*_encoded``) as read_pbf emits them."""
     path = fixtures_dir(scale)
-    names = [
-        "nodes",
-        "ways",
-        "relations",
-        "nodes_encoded",
-        "ways_encoded",
-        "relations_encoded",
-        "images",
-        "tiles",
-    ]
-    return {n: spark.read.parquet(os.path.join(path, f"{n}.parquet")) for n in names}
+    fx = {
+        n: spark.read.parquet(os.path.join(path, f"{n}.parquet"))
+        for n in ["nodes", "ways", "relations", "images", "tiles"]
+    }
+    enc = read_pbf(spark, os.path.join(path, OSM_SHARD))
+    for n in ["nodes_encoded", "ways_encoded", "relations_encoded"]:
+        fx[n] = enc[n]
+    return fx

@@ -20,9 +20,10 @@ primitivegroup, granularity, lat/lon_offset}, DenseNodes{id,lat,lon,
 keys_vals}, Way{id,keys,vals,refs}, Relation{id,keys,vals,roles_sid,
 memids,types}.
 
-The emitted block rows use the SAME schemas as sources/fixtures.py's
-encoded tables, so operators/osm.decode_* run unchanged on real PBF
-input — write_pbf + read path round-trip is tested.
+write_pbf_shard is the engine's one writer of the block format (the
+fixtures in sources/fixtures.py are shards it writes), and read_pbf its
+one reader: the emitted block rows are what operators/osm.decode_*
+consume — the write + read round-trip is tested.
 """
 
 from __future__ import annotations
@@ -250,88 +251,75 @@ def write_pbf_shard(
 
         return st, sid
 
-    if nodes is not None and len(nodes):
-        nodes = nodes.sort_values("id")
-        for b in range(0, len(nodes), block_size):
-            blk = nodes.iloc[b : b + block_size]
-            st, sid = st_builder()
-            kv: list[int] = []
-            for tags in blk["tags"]:
-                for k, v in tags.items():
-                    kv.append(sid(k))
-                    kv.append(sid(v))
-                kv.append(0)
-            ids = blk["id"].to_numpy(np.int64)
-            qlat = blk["qlat"].to_numpy(np.int64)
-            qlon = blk["qlon"].to_numpy(np.int64)
-            dense = (
-                _field(1, 2, encode_svarints(np.diff(ids, prepend=0)))
-                + _field(8, 2, encode_svarints(np.diff(qlat, prepend=0)))
-                + _field(9, 2, encode_svarints(np.diff(qlon, prepend=0)))
-                + _field(10, 2, encode_varints(kv))
-            )
-            group = _field(2, 2, dense)
-            block = _field(1, 2, _stringtable(st)) + _field(2, 2, group) + _gran_fields()
-            out += _fileblock("OSMData", block)
+    def deltas(values) -> np.ndarray:
+        return np.diff(np.asarray(values, dtype=np.int64), prepend=0)
 
-    if plain_nodes is not None and len(plain_nodes):
-        plain_nodes = plain_nodes.sort_values("id")
-        for b in range(0, len(plain_nodes), block_size):
-            blk = plain_nodes.iloc[b : b + block_size]
-            st, sid = st_builder()
-            nmsgs = []
-            for row in blk.itertuples(index=False):
-                n = (
-                    _field(1, 0, encode_svarints([row.id]))  # id: zigzag64
-                    + _field(2, 2, encode_varints([sid(k) for k in row.tags]))
-                    + _field(3, 2, encode_varints([sid(v) for v in row.tags.values()]))
-                    + _field(8, 0, encode_svarints([row.qlat]))
-                    + _field(9, 0, encode_svarints([row.qlon]))
-                )
-                nmsgs.append(_field(1, 2, n))  # PrimitiveGroup.nodes = 1
-            group = b"".join(nmsgs)
-            block = _field(1, 2, _stringtable(st)) + _field(2, 2, group) + _gran_fields()
-            out += _fileblock("OSMData", block)
+    def tag_fields(tags: dict, sid) -> bytes:
+        return _field(2, 2, encode_varints([sid(k) for k in tags])) + _field(
+            3, 2, encode_varints([sid(v) for v in tags.values()])
+        )
 
-    if ways is not None and len(ways):
-        ways = ways.sort_values("id")
-        for b in range(0, len(ways), block_size):
-            blk = ways.iloc[b : b + block_size]
+    def dense_group(blk: pd.DataFrame, sid) -> bytes:
+        kv: list[int] = []
+        for tags in blk["tags"]:
+            for k, v in tags.items():
+                kv.append(sid(k))
+                kv.append(sid(v))
+            kv.append(0)
+        dense = (
+            _field(1, 2, encode_svarints(deltas(blk["id"])))
+            + _field(8, 2, encode_svarints(deltas(blk["qlat"])))
+            + _field(9, 2, encode_svarints(deltas(blk["qlon"])))
+            + _field(10, 2, encode_varints(kv))
+        )
+        return _field(2, 2, dense)
+
+    def plain_node(row, sid) -> bytes:
+        return (
+            _field(1, 0, encode_svarints([row.id]))  # id: zigzag64
+            + tag_fields(row.tags, sid)
+            + _field(8, 0, encode_svarints([row.qlat]))
+            + _field(9, 0, encode_svarints([row.qlon]))
+        )
+
+    def way(row, sid) -> bytes:
+        return (
+            _field(1, 0, encode_varints([row.id]))
+            + tag_fields(row.tags, sid)
+            + _field(8, 2, encode_svarints(deltas(row.refs)))
+        )
+
+    def relation(row, sid) -> bytes:
+        return (
+            _field(1, 0, encode_varints([row.id]))
+            + tag_fields(row.tags, sid)
+            + _field(8, 2, encode_varints([sid(x) for x in row.roles]))
+            + _field(9, 2, encode_svarints(deltas(row.memids)))
+            + _field(10, 2, encode_varints(list(row.member_types)))
+        )
+
+    def each(tag: int, message):
+        """PrimitiveGroup of one field-``tag`` message per entity
+        (1 = Nodes, 3 = Ways, 4 = Relations)."""
+        return lambda blk, sid: b"".join(
+            _field(tag, 2, message(row, sid)) for row in blk.itertuples(index=False)
+        )
+
+    # only node blocks carry the coordinate fields
+    for entities, group_of, coords in (
+        (nodes, dense_group, True),
+        (plain_nodes, each(1, plain_node), True),
+        (ways, each(3, way), False),
+        (relations, each(4, relation), False),
+    ):
+        if entities is None or not len(entities):
+            continue
+        entities = entities.sort_values("id")
+        for b in range(0, len(entities), block_size):
             st, sid = st_builder()
-            wmsgs = []
-            for row in blk.itertuples(index=False):
-                refs = np.asarray(row.refs, dtype=np.int64)
-                w = (
-                    _field(1, 0, encode_varints([row.id]))
-                    + _field(2, 2, encode_varints([sid(k) for k in row.tags]))
-                    + _field(3, 2, encode_varints([sid(v) for v in row.tags.values()]))
-                    + _field(8, 2, encode_svarints(np.diff(refs, prepend=0)))
-                )
-                wmsgs.append(_field(3, 2, w))
-            group = b"".join(wmsgs)
+            group = group_of(entities.iloc[b : b + block_size], sid)
             block = _field(1, 2, _stringtable(st)) + _field(2, 2, group)
-            out += _fileblock("OSMData", block)
-
-    if relations is not None and len(relations):
-        relations = relations.sort_values("id")
-        for b in range(0, len(relations), block_size):
-            blk = relations.iloc[b : b + block_size]
-            st, sid = st_builder()
-            rmsgs = []
-            for row in blk.itertuples(index=False):
-                mem = np.asarray(row.memids, dtype=np.int64)
-                r = (
-                    _field(1, 0, encode_varints([row.id]))
-                    + _field(2, 2, encode_varints([sid(k) for k in row.tags]))
-                    + _field(3, 2, encode_varints([sid(v) for v in row.tags.values()]))
-                    + _field(8, 2, encode_varints([sid(x) for x in row.roles]))
-                    + _field(9, 2, encode_svarints(np.diff(mem, prepend=0)))
-                    + _field(10, 2, encode_varints(list(row.member_types)))
-                )
-                rmsgs.append(_field(4, 2, r))
-            group = b"".join(rmsgs)
-            block = _field(1, 2, _stringtable(st)) + _field(2, 2, group)
-            out += _fileblock("OSMData", block)
+            out += _fileblock("OSMData", block + (_gran_fields() if coords else b""))
 
     with open(path, "wb") as f:
         f.write(bytes(out))
@@ -340,7 +328,7 @@ def write_pbf_shard(
 # -------------------------------------------------------------- reader ----
 
 NODE_BLOCK_SCHEMA = (
-    "block_id int, ids_delta array<long>, lon_delta array<long>, "
+    "block_id long, ids_delta array<long>, lon_delta array<long>, "
     "lat_delta array<long>, keys_vals array<int>, stringtable array<string>, "
     "min_id long, max_id long, has_tags boolean, "
     "granularity int, lat_offset long, lon_offset long"
@@ -402,7 +390,7 @@ def decode_osm_header(raw: bytes, path: str = "") -> dict:
         )
     return hdr
 WAY_BLOCK_SCHEMA = (
-    "block_id int, id long, refs_delta array<long>, keys array<int>, "
+    "block_id long, id long, refs_delta array<long>, keys array<int>, "
     "vals array<int>, stringtable array<string>"
 )
 REL_BLOCK_SCHEMA = (
@@ -484,14 +472,15 @@ def _parse_primitive_block(raw: bytes):
     return st, groups, granularity, lat_offset, lon_offset
 
 
-def parse_pbf_bytes(content: bytes, path: str = ""):
+def parse_pbf_bytes(content: bytes, path: str = "", first_block: int = 0):
     """One shard's bytes -> (node_rows, way_rows, rel_rows, header_rows)
-    of block-row dicts (fixture schemas).  The OSMHeader block is
-    DECODED (not skipped): bbox/features/replication become header rows
-    and an unsupported required feature raises immediately
-    (top_level.go:340-345)."""
+    of block-row dicts (the *_BLOCK_SCHEMA layouts).  The shard's data
+    blocks are numbered ``first_block``, ``first_block + 1``, ... in file
+    order.  The OSMHeader block is DECODED (not skipped):
+    bbox/features/replication become header rows and an unsupported
+    required feature raises immediately (top_level.go:340-345)."""
     node_rows, way_rows, rel_rows, header_rows = [], [], [], []
-    block_id = 0
+    block_id = first_block
 
     def _node_row(ids_d, lon_d, lat_d, kv):
         ids = np.cumsum(ids_d)
@@ -632,6 +621,15 @@ def read_pbf(spark, path_glob: str):
     from pyspark.sql.types import StructType
 
     files = spark.read.format("binaryFile").load(path_glob).select("path", "content")
+    # block ids are unique across shards: shard k of the sorted listing
+    # numbers its blocks from k << 32 (a lone shard's ids are 0, 1, ...).
+    # inputFiles() lists URIs; the path column holds Hadoop Path strings
+    jvm = spark.sparkContext._jvm
+    shards = sorted(
+        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(u)).toString()
+        for u in files.inputFiles()
+    )
+    first_block = {p: k << 32 for k, p in enumerate(shards)}
 
     def parse(index: int, schema: str):
         """One output of parse_pbf_bytes (0 nodes, 1 ways, 2 relations,
@@ -642,7 +640,10 @@ def read_pbf(spark, path_glob: str):
             for pdf in it:
                 rows = []
                 for r in pdf.itertuples(index=False):
-                    rows.extend(parse_pbf_bytes(bytes(r.content), str(r.path))[index])
+                    path = str(r.path)
+                    rows.extend(
+                        parse_pbf_bytes(bytes(r.content), path, first_block[path])[index]
+                    )
                 yield pd.DataFrame(rows, columns=columns)
 
         return files.mapInPandas(run, schema)

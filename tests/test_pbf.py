@@ -1,6 +1,6 @@
 """PBF wire-format round-trip: world -> .osm.pbf shards -> distributed
-scan -> decoded entities == world; features identical to the parquet
-fixture path."""
+scan -> decoded entities == world; block ids across shards; the fixture
+cache as a PBF shard."""
 
 from __future__ import annotations
 
@@ -228,3 +228,45 @@ def test_pbf_tagless_block_flag(spark):
         spans = sorted((r["min_id"], r["max_id"]) for r in blocks)
         for (a1, b1), (a2, b2) in zip(spans, spans[1:]):
             assert b1 < a2
+
+
+def test_pbf_block_ids_unique_across_shards(spark):
+    """Every shard numbers its blocks from 0 on its own; read_pbf must
+    keep the ids apart, or block_multipoints merges blocks of different
+    shards into one feature."""
+    from lazyosm_spark.operators.osm import block_multipoints, decode_nodes
+    from lazyosm_spark.sources.fixtures import build_world
+
+    nodes = build_world("tiny")["nodes"]
+    halves = np.array_split(np.arange(len(nodes)), 2)
+    with tempfile.TemporaryDirectory() as d:
+        for si, idx in enumerate(halves):
+            pbf.write_pbf_shard(
+                os.path.join(d, f"n{si}.osm.pbf"), nodes=nodes.iloc[idx], block_size=50
+            )
+        enc = pbf.read_pbf(spark, os.path.join(d, "*.osm.pbf"))
+        blocks = block_multipoints(decode_nodes(enc["nodes_encoded"])).collect()
+    assert len(blocks) == sum(-(-len(idx) // 50) for idx in halves)
+    assert sum(b["n_points"] for b in blocks) == len(nodes)
+    assert max(b["n_points"] for b in blocks) <= 50
+
+
+def test_stale_fixture_cache_is_rebuilt(spark, tmp_path, monkeypatch):
+    """A fixture dir of the parquet block layout (``_DONE`` beside
+    ``nodes_encoded.parquet``, no shard) is rebuilt, not read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lazyosm_spark.sources.fixtures import OSM_SHARD, load_fixtures
+
+    stale = tmp_path / "tiny"
+    stale.mkdir()
+    (stale / "_DONE").write_text("{}")
+    pq.write_table(pa.table({"block_id": [0]}), stale / "nodes_encoded.parquet")
+    monkeypatch.setenv("LAZYOSM_FIXTURES", str(tmp_path))
+
+    fx = load_fixtures(spark, "tiny")
+    assert (stale / OSM_SHARD).exists()
+    assert not (stale / "nodes_encoded.parquet").exists()
+    assert "granularity" in fx["nodes_encoded"].columns
+    assert fx["nodes_encoded"].count() > 1

@@ -62,7 +62,7 @@ def main() -> None:
     import __spark_entry__ as e
     from lazyosm_spark import get_spark
 
-    spark = get_spark(cpus=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

@@ -120,7 +120,7 @@ def main() -> None:
     from lazyosm_spark.plans import driver_queries as dq
     from lazyosm_spark.sources.fixtures import gen_tiles
 
-    spark = get_spark(cpus=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     sections: list[tuple[str, str, list[str]]] = []
 
     # 1. predicate pushdown + column pruning on a filtered scan

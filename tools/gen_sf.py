@@ -111,5 +111,5 @@ if __name__ == "__main__":
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out = sys.argv[2] if len(sys.argv) > 2 else DEFAULT_OUT
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
-    spark = get_spark(cpus=16, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     print(generate(spark, src, out, factor))

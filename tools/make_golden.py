@@ -25,6 +25,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lazyosm_spark.plans.driver_queries import GOLDEN_DIR  # noqa: E402
 from lazyosm_spark.sources import images as im  # noqa: E402
 from lazyosm_spark.sources.fixtures import (  # noqa: E402
     SCALES,
@@ -97,8 +98,9 @@ def golden_way_features(world) -> pd.DataFrame:
 
 
 def golden_block_multipoints(world, npb: int) -> pd.DataFrame:
-    """Per-block count + bbox, with the same id-sorted block assignment
-    the encoder uses (sources/fixtures.encode_nodes)."""
+    """Per-block count + bbox of the id-sorted nodes in blocks of npb —
+    the node blocks of the fixture shard, which sources/fixtures.py
+    writes first (block j // npb)."""
     nodes = world["nodes"].sort_values("id").reset_index(drop=True)
     nodes = nodes.assign(block_id=(np.arange(len(nodes)) // npb).astype(np.int64))
     g = nodes.groupby("block_id")
@@ -308,9 +310,6 @@ def make(scale: str = "tiny") -> str:
     return out
 
 
-DRIVER_ARTIFACT_DIR = "/root/repo/tests/golden_driver"
-
-
 def make_driver_artifacts(
     scale: str = "small", sf_dir: str = "/root/testdata/sf0.01"
 ) -> str:
@@ -320,7 +319,7 @@ def make_driver_artifacts(
     sf0.01 run maps to (_fixture_scale); regenerate + commit after any
     fixture/geometry change:  python tools/make_golden.py driver
     """
-    out = DRIVER_ARTIFACT_DIR
+    out = GOLDEN_DIR
     os.makedirs(out, exist_ok=True)
     world = build_world(scale)
     golden_features(world)[["osm_id", "geom_type", "n_outers", "n_inners"]].to_parquet(

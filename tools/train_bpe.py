@@ -99,7 +99,7 @@ def spark_word_freqs(corpus: str) -> dict[str, int]:
     from lazyosm_spark.operators.tokenize import word_counts
 
     spark = get_spark(
-        app="train_bpe", cpus=8,
+        app="train_bpe",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     docs = spark.read.parquet(corpus).select("text")
