@@ -95,13 +95,6 @@ def minhash_signatures(
     seeded md5 hash.  Empty shingle set -> NULL signature (doc shorter
     than the n-gram window)."""
     sh_df = with_shingles(docs, id_col, text_col, ngram)
-    return minhash_signatures_from_shingles(sh_df, n_hashes)
-
-
-def minhash_signatures_from_shingles(
-    sh_df: DataFrame, n_hashes: int = DEFAULT_N_HASHES
-) -> DataFrame:
-    """(doc_id, sh array<string>) -> (doc_id, sig_0..sig_{n-1})."""
     sigs = _signature_cols(n_hashes)
     return sh_df.select("doc_id", *[c.alias(f"sig_{i}") for i, c in enumerate(sigs)])
 
@@ -116,6 +109,24 @@ def _signature_cols(n_hashes: int) -> list[F.Column]:
         return lambda s: md5_long(s, seed=seed)
 
     return [F.array_min(F.transform(F.col("sh"), hasher(i))) for i in range(n_hashes)]
+
+
+def band_keys(n_hashes: int = DEFAULT_N_HASHES, bands: int = DEFAULT_BANDS) -> F.Column:
+    """array<struct<band int, key string>> over the ``sh`` column: band
+    b's key is signatures b*r .. b*r+r-1 joined by '_' (r = n_hashes //
+    bands) — the LSH buckets of minhash_lsh_pairs and of the streaming
+    bucket dedup."""
+    r = n_hashes // bands
+    sigs = _signature_cols(n_hashes)
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws("_", *sigs[b * r : (b + 1) * r]).alias("key"),
+            )
+            for b in range(bands)
+        ]
+    )
 
 
 def minhash_lsh_pairs(
@@ -139,15 +150,6 @@ def minhash_lsh_pairs(
     Cache: one localCheckpoint (shingles + band keys) backs the
     returned plan; the call leaves nothing in CacheManager and at most
     that ONE persistent RDD (pytest-pinned)."""
-    rows_per_band = n_hashes // bands
-    sigs = _signature_cols(n_hashes)
-    band_keys = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws("_", *sigs[b * rows_per_band : (b + 1) * rows_per_band]).alias("key"),
-        )
-        for b in range(bands)
-    ]
     # one materialization of the shingle arrays AND their band keys:
     # the verify reads the shingles three times, and the bucket table
     # self-joins — at broadcast size that is a BroadcastHashJoin, which
@@ -155,7 +157,7 @@ def minhash_lsh_pairs(
     # signature passes once per join side
     sh_df = (
         with_shingles(docs, id_col, text_col, ngram)
-        .select("doc_id", "sh", F.array(*band_keys).alias("bk"))
+        .select("doc_id", "sh", band_keys(n_hashes, bands).alias("bk"))
         .localCheckpoint(eager=True)
     )
     buckets = sh_df.select("doc_id", F.inline("bk"))

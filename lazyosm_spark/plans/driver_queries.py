@@ -21,7 +21,11 @@ FIXTURE_QUERIES (rows-only checks; pytest carries their oracles).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -870,6 +874,41 @@ def _fixture_scale(sf_dir: str) -> str:
     return {"sf0.001": "tiny", "sf0.01": "small", "sf0.1": "small"}.get(
         os.path.basename(sf_dir.rstrip("/")), "small"
     )
+
+
+@functools.cache
+def _stream_root() -> str:
+    """The process's one scratch root for the streaming queries' trees,
+    made under tempfile.gettempdir() on first use and removed at exit."""
+    root = tempfile.mkdtemp(prefix="spark_graft_streams_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _run_stream(waves: list[DataFrame], start) -> DataFrame:
+    """Write ``waves`` as the input files of a fresh tree under
+    _stream_root(), run ``start(input_dir, input_schema, output_dir,
+    checkpoint_dir)`` (a streaming/pipeline operator) to completion and
+    read its output.  The tree outlives the call because the returned
+    frame reads it lazily.  A query still running after 240 s is
+    stopped and raises TimeoutError instead of returning partial
+    output."""
+    d = tempfile.mkdtemp(dir=_stream_root())
+    in_dir, out_dir, ck_dir = (os.path.join(d, x) for x in ("in", "out", "ck"))
+    for i, wave in enumerate(waves):
+        wave.write.parquet(os.path.join(in_dir, f"w{i}"))
+    q = start(in_dir + "/*", waves[0].schema.toDDL(), out_dir, ck_dir)
+    if not q.awaitTermination(240):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.id} did not finish in 240 s")
+    return waves[0].sparkSession.read.parquet(out_dir)
+
+
+def _halves(df: DataFrame, col: str) -> list[DataFrame]:
+    """Two arrival waves: the rows whose SQL expression ``col`` is at
+    most its median, then the rest."""
+    split = df.agg(F.expr(f"percentile({col}, 0.5)")).first()[0]
+    return [df.filter(F.expr(col) <= split), df.filter(F.expr(col) > split)]
 
 
 @_register_fixture(
@@ -1890,31 +1929,18 @@ def q_fx_streaming(spark, sf_dir):
     """Structured Streaming micro-batch tiling (availableNow) — result
     provably equals the batch operator (pytest); here the driver sees
     the streaming path produce rows."""
-    import os as _os
-    import tempfile
-
-    from lazyosm_spark.operators.spatial_join import tile_points
     from lazyosm_spark.sources.fixtures import load_fixtures
     from lazyosm_spark.streaming.pipeline import stream_tile_points
 
-    fx = load_fixtures(spark, _fixture_scale(sf_dir))
+    tiles = load_fixtures(spark, _fixture_scale(sf_dir))["tiles"]
     pts = _doc_points(spark, sf_dir).selectExpr(
         "cast(doc_id as string) as point_id", "lon", "lat"
     )
-    d = tempfile.mkdtemp(prefix="stream_q_")
-    pts.write.parquet(_os.path.join(d, "in", "b1"))
-    q = stream_tile_points(
-        spark,
-        input_dir=_os.path.join(d, "in") + "/*",
-        input_schema="point_id string, lon double, lat double",
-        tiles=fx["tiles"],
-        output_dir=_os.path.join(d, "out"),
-        checkpoint_dir=_os.path.join(d, "ck"),
+    out = _run_stream(
+        [pts], lambda i, s, o, c: stream_tile_points(spark, i, s, tiles, o, c)
     )
-    q.awaitTermination(240)
     return (
-        spark.read.parquet(_os.path.join(d, "out"))
-        .groupBy(F.col("resolution").cast("long").alias("resolution"))
+        out.groupBy(F.col("resolution").cast("long").alias("resolution"))
         .agg(F.count("*").cast("long").alias("n"))
         .orderBy("resolution")
     )
@@ -2001,31 +2027,13 @@ def q_fx_stream_sessionize(spark, sf_dir):
     events table arrives in two TIME-SPLIT waves (per-user order
     preserved), sessions spanning the wave boundary carried by state —
     checked against the same DuckDB oracle as the batch `sessionize`."""
-    import os as _os
-    import tempfile
-
     from lazyosm_spark.streaming.pipeline import stream_sessionize
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts")
-    split = ev.agg(F.expr("percentile(unix_timestamp(ts), 0.5)")).first()[0]
-    d = tempfile.mkdtemp(prefix="ssess_q_")
-    ev.filter(F.unix_timestamp("ts") <= split).write.parquet(
-        _os.path.join(d, "in", "w1")
+    out = _run_stream(
+        _halves(ev, "unix_timestamp(ts)"), functools.partial(stream_sessionize, spark)
     )
-    ev.filter(F.unix_timestamp("ts") > split).write.parquet(
-        _os.path.join(d, "in", "w2")
-    )
-    q = stream_sessionize(
-        spark,
-        _os.path.join(d, "in") + "/*",
-        "user_id long, event_id long, ts timestamp",
-        _os.path.join(d, "out"),
-        _os.path.join(d, "ck"),
-    )
-    q.awaitTermination(240)
-    return spark.read.parquet(_os.path.join(d, "out")).select(
-        "user_id", "event_id", "session_id"
-    )
+    return out.select("user_id", "event_id", "session_id")
 
 
 def _bucket_dedup_sql(n_hashes: int = 8, bands: int = 4, ngram: int = 3) -> str:
@@ -2068,26 +2076,13 @@ def q_fx_stream_lsh(spark, sf_dir):
     """Streaming LSH bucket-dedup over two doc_id-ordered waves: the
     keyed bucket state spans micro-batches; per-doc collision flags
     equal the pure-SQL EXISTS-an-earlier-doc rule."""
-    import os as _os
-    import tempfile
-
     from lazyosm_spark.streaming.pipeline import stream_minhash_bucket_dedup
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    split = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
-    d = tempfile.mkdtemp(prefix="slsh_q_")
-    docs.filter(F.col("doc_id") <= split).write.parquet(_os.path.join(d, "in", "w1"))
-    docs.filter(F.col("doc_id") > split).write.parquet(_os.path.join(d, "in", "w2"))
-    q = stream_minhash_bucket_dedup(
-        spark, _os.path.join(d, "in") + "/*", "doc_id long, text string",
-        _os.path.join(d, "out"), _os.path.join(d, "ck"),
+    out = _run_stream(
+        _halves(docs, "doc_id"), functools.partial(stream_minhash_bucket_dedup, spark)
     )
-    q.awaitTermination(240)
-    return (
-        spark.read.parquet(_os.path.join(d, "out"))
-        .groupBy("doc_id")
-        .agg(F.max("collided").alias("any_collision"))
-    )
+    return out.groupBy("doc_id").agg(F.max("collided").alias("any_collision"))
 
 
 @_register_fixture(
@@ -2102,21 +2097,11 @@ FROM h
 def q_fx_stateful(spark, sf_dir):
     """applyInPandasWithState streaming dedup over the documents table
     split into two arrival waves."""
-    import os as _os
-    import tempfile
-
     from lazyosm_spark.streaming.pipeline import stream_exact_dedup
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    d = tempfile.mkdtemp(prefix="sdedup_q_")
-    docs.filter(F.col("doc_id") % 2 == 0).write.parquet(_os.path.join(d, "in", "b1"))
-    docs.filter(F.col("doc_id") % 2 == 1).write.parquet(_os.path.join(d, "in", "b2"))
-    q = stream_exact_dedup(
-        spark, _os.path.join(d, "in") + "/*", "doc_id long, text string",
-        _os.path.join(d, "out"), _os.path.join(d, "ck"),
-    )
-    q.awaitTermination(240)
-    out = spark.read.parquet(_os.path.join(d, "out"))
+    waves = [docs.filter(F.col("doc_id") % 2 == k) for k in (0, 1)]
+    out = _run_stream(waves, functools.partial(stream_exact_dedup, spark))
     return out.agg(
         F.count("*").alias("n_unique"),
         F.countDistinct("text_hash").alias("n_hashes"),
@@ -2149,25 +2134,13 @@ def q_fx_stream_pack(spark, sf_dir):
     """Streaming per-stratum sequence packing over two doc_id-ordered
     arrival waves: the keyed token cursor spans micro-batches, so the
     result equals the batch per-lang cumsum SQL."""
-    import os as _os
-    import tempfile
-
     from lazyosm_spark.streaming.pipeline import stream_pack_sequences
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    split = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
-    d = tempfile.mkdtemp(prefix="spack_q_")
-    docs.filter(F.col("doc_id") <= split).write.parquet(_os.path.join(d, "in", "w1"))
-    docs.filter(F.col("doc_id") > split).write.parquet(_os.path.join(d, "in", "w2"))
-    q = stream_pack_sequences(
-        spark, _os.path.join(d, "in") + "/*",
-        "doc_id long, lang string, text string",
-        _os.path.join(d, "out"), _os.path.join(d, "ck"),
+    out = _run_stream(
+        _halves(docs, "doc_id"), functools.partial(stream_pack_sequences, spark)
     )
-    q.awaitTermination(240)
-    return spark.read.parquet(_os.path.join(d, "out")).select(
-        "doc_id", "lang", "seq_id", "offset", "n_tokens"
-    )
+    return out.select("doc_id", "lang", "seq_id", "offset", "n_tokens")
 
 
 def _stream_tok_pack_sql(ctx: int = 128) -> str:
@@ -2197,26 +2170,14 @@ def q_fx_stream_tokenize_pack(spark, sf_dir):
     (two doc_id-ordered arrival waves, keyed cursor spanning them);
     n_tokens must equal the committed scalar-BPE golden per doc and
     the chunk math the batch cumsum."""
-    import os as _os
-    import tempfile
-
     from lazyosm_spark.streaming.pipeline import stream_tokenize_pack
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    split = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
-    d = tempfile.mkdtemp(prefix="stokpack_q_")
-    docs.filter(F.col("doc_id") <= split).write.parquet(_os.path.join(d, "in", "w1"))
-    docs.filter(F.col("doc_id") > split).write.parquet(_os.path.join(d, "in", "w2"))
-    q = stream_tokenize_pack(
-        spark, _os.path.join(d, "in") + "/*",
-        "doc_id long, lang string, text string",
-        _os.path.join(d, "out"), _os.path.join(d, "ck"),
-        ctx_len=128,
+    out = _run_stream(
+        _halves(docs, "doc_id"),
+        functools.partial(stream_tokenize_pack, spark, ctx_len=128),
     )
-    q.awaitTermination(240)
-    return spark.read.parquet(_os.path.join(d, "out")).select(
-        "doc_id", "lang", "seq_id", "offset", "n_tokens"
-    )
+    return out.select("doc_id", "lang", "seq_id", "offset", "n_tokens")
 
 
 # ======================================================================
@@ -2474,28 +2435,16 @@ def q_fx_stream_decontaminate(spark, sf_dir):
     flagged set and every per-doc stat must equal the batch operator —
     spans never cross documents, so streaming is exact, and the oracle
     is literally the batch query's SQL."""
-    import os as _os
-    import tempfile
-
     from lazyosm_spark.operators.tokenize import tokenize
     from lazyosm_spark.streaming.pipeline import stream_decontaminate
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = tokenize(docs.filter(F.col("doc_id") % 50 == 0))
-    split = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
-    d = tempfile.mkdtemp(prefix="sdecon_q_")
-    docs.filter(F.col("doc_id") <= split).write.parquet(_os.path.join(d, "in", "w1"))
-    docs.filter(F.col("doc_id") > split).write.parquet(_os.path.join(d, "in", "w2"))
-    q = stream_decontaminate(
-        spark, _os.path.join(d, "in") + "/*",
-        "doc_id long, text string", ev,
-        _os.path.join(d, "out"), _os.path.join(d, "ck"),
-        span_len=8,
+    out = _run_stream(
+        _halves(docs, "doc_id"),
+        lambda i, s, o, c: stream_decontaminate(spark, i, s, ev, o, c, span_len=8),
     )
-    q.awaitTermination(240)
-    return spark.read.parquet(_os.path.join(d, "out")).select(
-        "doc_id", "n_tokens", "n_hit_spans", "hit_tokens", "hit_frac"
-    )
+    return out.select("doc_id", "n_tokens", "n_hit_spans", "hit_tokens", "hit_frac")
 
 
 def _repetition_sql() -> str:

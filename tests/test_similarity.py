@@ -119,14 +119,11 @@ def test_embedding_near_dup_lsh_subset_of_exact(spark):
 def test_near_pair_queries_match_duckdb_oracle(spark, name):
     """Each near-pair engine's registered query equals its oracle SQL run
     on DuckDB, under the driver's own equality gate."""
-    import duckdb
-
     from lazyosm_spark.plans import driver_queries as dq
-    from tools.compare_driver import compare
+    from tools.compare_driver import compare, oracle_connection
 
     got = dq.all_queries()[name](spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    con = oracle_connection(SF)
     want = con.sql(dq.ORACLES[name]).df()
     assert len(got) > 0
     assert compare(got, want) == []

@@ -1,12 +1,25 @@
-"""Streaming surface: micro-batch tiling equals the batch operator;
-windowed rollup matches its batch twin."""
+"""Streaming surface: each operator equals its batch twin (micro-batch
+tiling, windowed rollup, sessionization, dedup, packing,
+decontamination), keyed state spans restarts, and every streaming
+driver query matches its DuckDB oracle and leaves no temp tree."""
 
 from __future__ import annotations
 
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
+
+STREAM_QUERIES = [
+    "fx_streaming_tiling",
+    "fx_streaming_sessionize",
+    "fx_streaming_lsh_dedup",
+    "fx_stateful_stream_dedup",
+    "fx_streaming_pack",
+    "fx_stream_tokenize_pack",
+    "fx_stream_decontaminate",
+]
 
 
 def test_stream_tile_points_equals_batch(spark, fx):
@@ -39,7 +52,7 @@ def test_stream_tile_points_equals_batch(spark, fx):
             output_dir=out_dir,
             checkpoint_dir=ck_dir,
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
         got = {
             (r["point_id"], r["tile_id"])
@@ -64,7 +77,7 @@ def test_stream_tile_points_equals_batch(spark, fx):
             output_dir=out_dir,
             checkpoint_dir=os.path.join(d, "ck2"),
         )
-        q2.awaitTermination(120)
+        assert q2.awaitTermination(120)
         assert spark.read.parquet(out_dir).count() == n_before
 
 
@@ -114,7 +127,7 @@ def test_stream_sessionize_state_spans_restarts(spark):
             spark, in_dir + "/*", "user_id long, event_id long, ts timestamp",
             out_dir, ck,
         )
-        q1.awaitTermination(120)
+        assert q1.awaitTermination(120)
         ev.filter(F.unix_timestamp("ts") > split).coalesce(1).write.parquet(
             os.path.join(in_dir, "w2")
         )
@@ -122,7 +135,7 @@ def test_stream_sessionize_state_spans_restarts(spark):
             spark, in_dir + "/*", "user_id long, event_id long, ts timestamp",
             out_dir, ck,
         )
-        q2.awaitTermination(120)
+        assert q2.awaitTermination(120)
 
         got = {
             (r["user_id"], r["event_id"]): r["session_id"]
@@ -164,14 +177,14 @@ def test_stream_lsh_bucket_dedup_state_spans_restarts(spark):
         q1 = stream_minhash_bucket_dedup(
             spark, in_dir + "/*", "doc_id long, text string", out_dir, ck
         )
-        q1.awaitTermination(120)
+        assert q1.awaitTermination(120)
         spark.createDataFrame(wave2, "doc_id long, text string").coalesce(1).write.parquet(
             os.path.join(in_dir, "w2")
         )
         q2 = stream_minhash_bucket_dedup(
             spark, in_dir + "/*", "doc_id long, text string", out_dir, ck
         )
-        q2.awaitTermination(120)
+        assert q2.awaitTermination(120)
 
         flags = {
             r["doc_id"]: r["c"]
@@ -228,14 +241,14 @@ def test_watermark_drops_late_events(spark):
             "event_id long, ts timestamp, event_type string, value double",
             out_dir, ck,
         )
-        q1.awaitTermination(120)
+        assert q1.awaitTermination(120)
         df(wave2).coalesce(1).write.parquet(os.path.join(in_dir, "w2"))
         q2 = stream_windowed_counts(
             spark, in_dir + "/*",
             "event_id long, ts timestamp, event_type string, value double",
             out_dir, ck,
         )
-        q2.awaitTermination(120)
+        assert q2.awaitTermination(120)
 
         got = {
             (r["win_start"], r["event_type"]): r["n"]
@@ -274,7 +287,7 @@ def test_stream_exact_dedup_stateful(spark):
         q = stream_exact_dedup(
             spark, in_dir + "/*", "doc_id long, text string", out_dir, ck
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         out = spark.read.parquet(out_dir)
         rows = out.collect()
         # exactly one survivor per distinct text (7 distinct)
@@ -312,12 +325,12 @@ def test_stream_pack_sequences_cursor_spans_restarts(spark):
             os.path.join(in_dir, "w1")
         )
         q1 = stream_pack_sequences(spark, in_dir + "/*", schema, out_dir, ck, ctx_len=ctx)
-        q1.awaitTermination(120)
+        assert q1.awaitTermination(120)
         docs.filter(F.col("doc_id") >= 60).coalesce(1).write.parquet(
             os.path.join(in_dir, "w2")
         )
         q2 = stream_pack_sequences(spark, in_dir + "/*", schema, out_dir, ck, ctx_len=ctx)
-        q2.awaitTermination(120)
+        assert q2.awaitTermination(120)
 
         got = {
             r["doc_id"]: (r["lang"], r["seq_id"], r["offset"], r["n_tokens"])
@@ -368,12 +381,12 @@ def test_stream_tokenize_pack_matches_batch(spark):
             os.path.join(in_dir, "w1")
         )
         q1 = stream_tokenize_pack(spark, in_dir + "/*", schema, out_dir, ck, ctx_len=ctx)
-        q1.awaitTermination(120)
+        assert q1.awaitTermination(120)
         docs.filter(F.col("doc_id") >= 60).coalesce(1).write.parquet(
             os.path.join(in_dir, "w2")
         )
         q2 = stream_tokenize_pack(spark, in_dir + "/*", schema, out_dir, ck, ctx_len=ctx)
-        q2.awaitTermination(120)
+        assert q2.awaitTermination(120)
 
         got = {
             r["doc_id"]: (r["lang"], r["seq_id"], r["offset"], r["n_tokens"])
@@ -422,10 +435,52 @@ def test_stream_decontaminate_equals_batch(spark, tmp_path):
         spark, os.path.join(d, "in") + "/*", "doc_id long, text string",
         ev, os.path.join(d, "out"), os.path.join(d, "ck"), span_len=6,
     )
-    q.awaitTermination(240)
+    assert q.awaitTermination(240)
     got = {
         r["doc_id"]: (r["n_tokens"], r["n_hit_spans"], r["hit_tokens"])
         for r in spark.read.parquet(os.path.join(d, "out")).collect()
     }
     assert got == batch
     assert any(v[1] > 0 for v in got.values())  # eval docs really flagged
+
+
+@pytest.mark.parametrize("name", STREAM_QUERIES)
+def test_streaming_query_matches_oracle(spark, name, tmp_path, monkeypatch):
+    """Each streaming driver query equals its oracle SQL on DuckDB (at
+    sf0.01, the scale of the golden tiling and BPE oracles), stops its
+    stream, and leaves nothing in the temp dir but the process's one
+    stream root."""
+    from lazyosm_spark.plans import driver_queries as dq
+    from tools.compare_driver import SF_DIR, compare, oracle_connection
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = dq.all_queries()[name](spark, SF_DIR).toPandas()
+    assert spark.streams.active == []
+    left = os.listdir(tmp_path)
+    assert len(left) <= 1, left
+    assert all(n.startswith("spark_graft_streams_") for n in left), left
+    con = oracle_connection()
+    want = con.sql(dq.ORACLES[name]).df()
+    assert len(got) > 0
+    assert compare(got, want) == []
+
+
+def test_run_stream_timeout_stops_query(spark):
+    """A stream that does not finish in time is stopped and raises —
+    the query never reads its partial output."""
+    from lazyosm_spark.plans.driver_queries import _run_stream
+
+    class HungQuery:
+        id = "hung"
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = HungQuery()
+    with pytest.raises(TimeoutError):
+        _run_stream([spark.range(3)], lambda *paths: q)
+    assert q.stopped

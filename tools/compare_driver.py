@@ -58,14 +58,21 @@ def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     return diffs
 
 
+def oracle_connection(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per driver table of ``sf_dir``
+    — the names every oracle SQL reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main() -> None:
     import __spark_entry__ as e
     from lazyosm_spark import get_spark
 
     spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = oracle_connection()
 
     qs, oracles = e.queries(), e.oracle_sql()
     only = set(sys.argv[1:])
