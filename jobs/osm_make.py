@@ -6,8 +6,10 @@
         [--format parquet|geojson|geobuf] [--cpus 32]
 
 Replaces the reference's two passes (index + execute, SURVEY.md §3.1)
-with one declarative plan: binaryFile scan -> wire decode -> entity
-decode -> J1/J2/J3 joins -> ring assembly -> sink.  Parquet sink keeps
+with one parse and one declarative plan: read_pbf's eager job scans the
+shards (binaryFile) and wire-decodes each shard once into a checkpointed
+block frame; entity decode -> J1/J2/J3 joins -> ring assembly -> sink
+then read its node, way and relation views.  Parquet sink keeps
 the typed feature schema; geojson writes line-delimited Features;
 geobuf writes Mapbox-geobuf binary blobs (the reference's own output
 format, top_level.go:113) as (n_features, geobuf) parquet rows.

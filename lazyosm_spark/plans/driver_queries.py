@@ -929,13 +929,13 @@ def q_fx_assembly(spark, sf_dir):
         decode_ways,
         relation_features,
     )
-    from lazyosm_spark.sources.fixtures import load_fixtures
+    from lazyosm_spark.sources.fixtures import fixture_pbf
 
-    fx = load_fixtures(spark, _fixture_scale(sf_dir))
+    enc = fixture_pbf(spark, _fixture_scale(sf_dir))
     rf = relation_features(
-        decode_relations(fx["relations_encoded"]),
-        decode_ways(fx["ways_encoded"]),
-        decode_nodes(fx["nodes_encoded"]),
+        decode_relations(enc["relations_encoded"]),
+        decode_ways(enc["ways_encoded"]),
+        decode_nodes(enc["nodes_encoded"]),
     )
     return rf.select(
         "osm_id",
@@ -951,10 +951,10 @@ def q_fx_assembly(spark, sf_dir):
 )
 def q_fx_way_features(spark, sf_dir):
     from lazyosm_spark.operators.osm import decode_nodes, decode_ways, way_features
-    from lazyosm_spark.sources.fixtures import load_fixtures
+    from lazyosm_spark.sources.fixtures import fixture_pbf
 
-    fx = load_fixtures(spark, _fixture_scale(sf_dir))
-    wf = way_features(decode_ways(fx["ways_encoded"]), decode_nodes(fx["nodes_encoded"]))
+    enc = fixture_pbf(spark, _fixture_scale(sf_dir))
+    wf = way_features(decode_ways(enc["ways_encoded"]), decode_nodes(enc["nodes_encoded"]))
     return wf.select("osm_id", "geom_type").orderBy("osm_id")
 
 
@@ -1882,10 +1882,10 @@ FROM {_golden('block_multipoints_small')}
 )
 def q_fx_multipoints(spark, sf_dir):
     from lazyosm_spark.operators.osm import block_multipoints, decode_nodes
-    from lazyosm_spark.sources.fixtures import load_fixtures
+    from lazyosm_spark.sources.fixtures import fixture_pbf
 
-    fx = load_fixtures(spark, _fixture_scale(sf_dir))
-    out = block_multipoints(decode_nodes(fx["nodes_encoded"]))
+    enc = fixture_pbf(spark, _fixture_scale(sf_dir))
+    out = block_multipoints(decode_nodes(enc["nodes_encoded"]))
     return out.select(
         F.col("block_id").cast("long").alias("block_id"),
         F.col("n_points").cast("long").alias("n_points"),
@@ -1907,12 +1907,12 @@ def q_fx_pbf(spark, sf_dir):
     scan -> decode; returns per-kind entity counts (pytest checks the
     decoded entities against the world itself)."""
     from lazyosm_spark.operators.osm import decode_nodes, decode_ways
-    from lazyosm_spark.sources.fixtures import load_fixtures
+    from lazyosm_spark.sources.fixtures import fixture_pbf
 
-    fx = load_fixtures(spark, _fixture_scale(sf_dir))
-    n = decode_nodes(fx["nodes_encoded"]).count()
-    w = decode_ways(fx["ways_encoded"]).count()
-    r = fx["relations_encoded"].count()
+    enc = fixture_pbf(spark, _fixture_scale(sf_dir))
+    n = decode_nodes(enc["nodes_encoded"]).count()
+    w = decode_ways(enc["ways_encoded"]).count()
+    r = enc["relations_encoded"].count()
     return spark.createDataFrame(
         [(int(n), int(w), int(r))], "n_nodes long, n_ways long, n_relations long"
     )

@@ -6,8 +6,16 @@ without duplicating work.  In production these are Iceberg metadata
 tables (snapshot log + manifests); this sandbox has no Iceberg jars, so
 the same semantics are implemented as Parquet metadata tables plus a
 JSON-lines snapshot log — isolated here so a real Iceberg catalog is a
-drop-in (`--packages org.apache.iceberg:iceberg-spark-runtime-...` and
-swap _write_meta to `.writeTo(...).append()`).
+drop-in (`--packages org.apache.iceberg:iceberg-spark-runtime-...`).
+
+The lineage commit is a driver-side file write, not a Spark job: the
+at most n_buckets lineage rows are already on the driver, so
+_commit_lineage writes them with pyarrow as ONE parquet file under a
+``_``-prefixed temp name (which Spark and pyarrow readers skip) and
+renames it into place.  _commit_lineage is the swap point for Iceberg:
+a table commit (``.writeTo(...).append()``) replaces that file write.
+The root must be visible to the driver (the snapshot log is a local
+file too).
 
 Layout under <root>/:
     data/<stage>/bucket=<b>/*.parquet      stage output, bucketed by key
@@ -24,7 +32,10 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +52,20 @@ def lineage_path(root: str, stage: str) -> str:
 
 def snapshot_log(root: str) -> str:
     return os.path.join(root, "_snapshots.jsonl")
+
+
+def _lineage_files(root: str, stage: str) -> list[str]:
+    """The stage's committed lineage files; a ``_``- or ``.``-prefixed
+    name (an interrupted commit's temp file, a checksum file) is not
+    one."""
+    path = lineage_path(root, stage)
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
 
 def _bucket(key_col: str, n: int):
@@ -90,8 +115,9 @@ class CheckpointedPipeline:
     def _recorded(self, stage: str) -> DataFrame | None:
         """The stage's committed lineage table, or None before its first
         commit (an existence check, not a failed read)."""
-        path = lineage_path(self.root, stage)
-        return self.spark.read.parquet(path) if os.path.exists(path) else None
+        if not _lineage_files(self.root, stage):
+            return None
+        return self.spark.read.parquet(lineage_path(self.root, stage))
 
     def completed_buckets(self, stage: str) -> DataFrame:
         recorded = self._recorded(stage)
@@ -111,10 +137,13 @@ class CheckpointedPipeline:
         from pyspark.storagelevel import StorageLevel
 
         # the committed (bucket, row_count) rows: at most n_buckets, read
-        # to the driver once — they give the pending filter and, with the
-        # new rows, the snapshot record
-        recorded = self._recorded(stage)
-        done_rows = [] if recorded is None else recorded.select("bucket", "row_count").collect()
+        # on the driver — they give the pending filter and, with the new
+        # rows, the snapshot record
+        done_rows = [
+            row
+            for path in _lineage_files(self.root, stage)
+            for row in pq.read_table(path, columns=["bucket", "row_count"]).to_pylist()
+        ]
         done = sorted({r["bucket"] for r in done_rows})
         bucketed = output_df.withColumn("bucket", _bucket(key_col, self.n_buckets))
         if done:
@@ -147,15 +176,47 @@ class CheckpointedPipeline:
                 .parquet(data_path(self.root, stage))
             )
             commit_seq = self._next_commit_seq(stage)
-            lineage = (
-                self.spark.createDataFrame(lineage_rows)
-                .withColumn("stage", F.lit(stage))
-                .withColumn("commit_seq", F.lit(commit_seq))
-            )
-            lineage.write.mode("append").parquet(lineage_path(self.root, stage))
+            self._commit_lineage(stage, commit_seq, lineage_rows)
             self._log_snapshot(stage, commit_seq, done_rows + lineage_rows)
         pending.unpersist()
-        return self.spark.read.parquet(data_path(self.root, stage)).drop("bucket")
+        # the schema is known, so the read-back runs no inference job
+        return (
+            self.spark.read.schema(bucketed.schema)
+            .parquet(data_path(self.root, stage))
+            .drop("bucket")
+        )
+
+    def _commit_lineage(self, stage: str, commit_seq: int, rows: list) -> None:
+        """Write one commit's lineage rows as one parquet file: first
+        under a ``_``-prefixed temp name, then renamed into place, so a
+        reader sees the whole file or none of it.  The columns are those
+        Spark writes for ``createDataFrame(rows)`` plus the stage and
+        commit_seq literals — the bucket and counts are long, and the
+        key zone map takes the type of its collected Python values (an
+        integral key is long) — so lineage tables that Spark wrote read
+        as one table with these files."""
+        key_type = pa.array([r["key_min"] for r in rows]).type
+        schema = pa.schema(
+            [
+                ("bucket", pa.int64()),
+                ("row_count", pa.int64()),
+                ("checksum", pa.int64()),
+                ("key_min", key_type),
+                ("key_max", key_type),
+                pa.field("stage", pa.string(), nullable=False),
+                pa.field("commit_seq", pa.int32(), nullable=False),
+            ]
+        )
+        table = pa.Table.from_pylist(
+            [{**r.asDict(), "stage": stage, "commit_seq": commit_seq} for r in rows],
+            schema=schema,
+        )
+        path = lineage_path(self.root, stage)
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{commit_seq:05d}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, "_" + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
 
     def _next_commit_seq(self, stage: str) -> int:
         """Commit ordinal per stage, derived from the snapshot log (the

@@ -386,14 +386,16 @@ def fixtures_dir(scale: str = "small") -> str:
 
 
 def load_fixtures(spark, scale: str = "small") -> dict:
-    """The logical world, images and tiles as parquet frames, plus the
-    OSM shard's block frames (``*_encoded``) as read_pbf emits them."""
+    """The logical world, images and tiles as parquet frames (no Spark
+    job runs); the OSM shard's block frames come from fixture_pbf."""
     path = fixtures_dir(scale)
-    fx = {
+    return {
         n: spark.read.parquet(os.path.join(path, f"{n}.parquet"))
         for n in ["nodes", "ways", "relations", "images", "tiles"]
     }
-    enc = read_pbf(spark, os.path.join(path, OSM_SHARD))
-    for n in ["nodes_encoded", "ways_encoded", "relations_encoded"]:
-        fx[n] = enc[n]
-    return fx
+
+
+def fixture_pbf(spark, scale: str = "small") -> dict:
+    """read_pbf on the fixture OSM shard: its block frames
+    (``*_encoded``, ``header``), parsed by one eager job."""
+    return read_pbf(spark, os.path.join(fixtures_dir(scale), OSM_SHARD))

@@ -6,7 +6,9 @@ The reference's whole physical layer re-expressed for Spark
 - S1 fileblock framing ``[4-byte BE len][BlobHeader][Blob]``
   (top_level.go:236-259) -> parsed per file inside mapInPandas over a
   ``binaryFile`` scan; sharded .pbf files give block-level parallelism
-  (one task per shard, the cluster layout for a 100 TB ingest).
+  (one task per shard, the cluster layout for a 100 TB ingest).  Each
+  shard is one binary value, so it must stay under binaryFile's 2 GiB
+  limit.
 - S2 blob decompress (zlib raw_size-verified, top_level.go:301-326).
 - S5 block classify by primitive-group kind (primitiveblock.go:81-124).
 - varint/zigzag decode is numpy-VECTORIZED: one pass builds every
@@ -23,7 +25,9 @@ memids,types}.
 write_pbf_shard is the engine's one writer of the block format (the
 fixtures in sources/fixtures.py are shards it writes), and read_pbf its
 one reader: the emitted block rows are what operators/osm.decode_*
-consume — the write + read round-trip is tested.
+consume — the write + read round-trip is tested.  read_pbf is eager: one
+job parses each shard once into one checkpointed block frame, and the
+per-kind frames it returns are views of that checkpoint.
 """
 
 from __future__ import annotations
@@ -397,6 +401,13 @@ REL_BLOCK_SCHEMA = (
     "id long, memids_delta array<long>, roles array<string>, "
     "member_types array<int>, tags map<string,string>"
 )
+# read_pbf's frames, in parse_pbf_bytes' output order
+BLOCK_FRAMES = (
+    ("nodes_encoded", NODE_BLOCK_SCHEMA),
+    ("ways_encoded", WAY_BLOCK_SCHEMA),
+    ("relations_encoded", REL_BLOCK_SCHEMA),
+    ("header", HEADER_SCHEMA),
+)
 
 
 def _iter_fileblocks(content: bytes):
@@ -613,44 +624,74 @@ def parse_pbf_bytes(content: bytes, path: str = "", first_block: int = 0):
     return node_rows, way_rows, rel_rows, header_rows
 
 
-def read_pbf(spark, path_glob: str):
-    """Distributed PBF scan: one task per shard (binaryFile source),
-    wire parse + vectorized varint decode in mapInPandas, emitting the
-    engine's encoded-block schemas.  Compose with operators/osm.decode_*
-    for logical entities and feature assembly."""
-    from pyspark.sql.types import StructType
-
-    files = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    # block ids are unique across shards: shard k of the sorted listing
-    # numbers its blocks from k << 32 (a lone shard's ids are 0, 1, ...).
-    # inputFiles() lists URIs; the path column holds Hadoop Path strings
+def _shards(spark, path_glob: str) -> list[str]:
+    """The sorted files ``path_glob`` matches, as Hadoop path strings
+    (the ``binaryFile`` scan's ``path`` values), listed once on the
+    driver through Hadoop's own glob."""
     jvm = spark.sparkContext._jvm
-    shards = sorted(
-        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(u)).toString()
-        for u in files.inputFiles()
-    )
+    glob = jvm.org.apache.hadoop.fs.Path(path_glob)
+    fs = glob.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    statuses = fs.globStatus(glob) or []  # null when a literal path is missing
+    shards = sorted(st.getPath().toString() for st in statuses if st.isFile())
+    if not shards:
+        raise ValueError(f"no .osm.pbf shard matches {path_glob!r}")
+    return shards
+
+
+def read_pbf(spark, path_glob: str) -> dict:
+    """Distributed PBF scan, parsed once: one task per shard group
+    (``binaryFile`` source over the explicit shard list), wire parse +
+    vectorized varint decode in ONE mapInPandas that calls
+    parse_pbf_bytes once per shard and emits one block frame — one
+    struct column per block schema, exactly one of them set per row.
+
+    EAGER: the call runs one job that materializes that frame with
+    ``localCheckpoint`` — the call's one result-backing persistent RDD —
+    so a shard whose header requires an unsupported feature raises
+    here.  ``nodes_encoded``, ``ways_encoded``, ``relations_encoded``
+    and ``header`` are filter+select views of the checkpoint (the
+    *_BLOCK_SCHEMA / HEADER_SCHEMA layouts): a plan that uses them in
+    many branches parses nothing again.  The checkpoint keeps the scan's
+    file-size statistics, which keep the downstream joins broadcast.
+
+    Each shard is one ``binaryFile`` value, so a shard must stay under
+    its 2 GiB limit (``spark.sql.sources.binaryFile.maxLength``).
+    Compose with operators/osm.decode_* for logical entities and
+    feature assembly."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructField, StructType
+
+    shards = _shards(spark, path_glob)
+    # block ids are unique across shards: shard k of the sorted listing
+    # numbers its blocks from k << 32 (a lone shard's ids are 0, 1, ...)
     first_block = {p: k << 32 for k, p in enumerate(shards)}
+    schema = StructType(
+        [StructField(name, StructType.fromDDL(ddl)) for name, ddl in BLOCK_FRAMES]
+    )
 
-    def parse(index: int, schema: str):
-        """One output of parse_pbf_bytes (0 nodes, 1 ways, 2 relations,
-        3 header) as a frame; the pandas columns are the schema's."""
-        columns = StructType.fromDDL(schema).names
+    def parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            tagged = []  # (frame name, block row), in shard order
+            for r in pdf.itertuples(index=False):
+                path = str(r.path)
+                outputs = parse_pbf_bytes(bytes(r.content), path, first_block[path])
+                for (name, _), rows in zip(BLOCK_FRAMES, outputs):
+                    tagged += [(name, row) for row in rows]
+            yield pd.DataFrame(
+                {
+                    name: [row if kind == name else None for kind, row in tagged]
+                    for name, _ in BLOCK_FRAMES
+                }
+            )
 
-        def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    path = str(r.path)
-                    rows.extend(
-                        parse_pbf_bytes(bytes(r.content), path, first_block[path])[index]
-                    )
-                yield pd.DataFrame(rows, columns=columns)
-
-        return files.mapInPandas(run, schema)
-
+    blocks = (
+        spark.read.format("binaryFile")
+        .load(shards)
+        .select("path", "content")
+        .mapInPandas(parse, schema)
+        .localCheckpoint(eager=True)
+    )
     return {
-        "nodes_encoded": parse(0, NODE_BLOCK_SCHEMA),
-        "ways_encoded": parse(1, WAY_BLOCK_SCHEMA),
-        "relations_encoded": parse(2, REL_BLOCK_SCHEMA),
-        "header": parse(3, HEADER_SCHEMA),
+        name: blocks.filter(F.col(name).isNotNull()).select(f"{name}.*")
+        for name, _ in BLOCK_FRAMES
     }

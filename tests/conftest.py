@@ -35,3 +35,11 @@ def fx(spark):
     from lazyosm_spark.sources.fixtures import load_fixtures
 
     return load_fixtures(spark, "tiny")
+
+
+@pytest.fixture(scope="session")
+def enc(spark):
+    """The tiny fixture shard's block frames (read_pbf's ``*_encoded``)."""
+    from lazyosm_spark.sources.fixtures import fixture_pbf
+
+    return fixture_pbf(spark, "tiny")

@@ -41,7 +41,7 @@ def _oracle_features(fx):
     return out
 
 
-def test_relation_features_match_oracle(spark, fx):
+def test_relation_features_match_oracle(spark, fx, enc):
     from lazyosm_spark.operators.osm import (
         decode_nodes,
         decode_relations,
@@ -52,9 +52,9 @@ def test_relation_features_match_oracle(spark, fx):
     got = {
         r["osm_id"]: r
         for r in relation_features(
-            decode_relations(fx["relations_encoded"]),
-            decode_ways(fx["ways_encoded"]),
-            decode_nodes(fx["nodes_encoded"]),
+            decode_relations(enc["relations_encoded"]),
+            decode_ways(enc["ways_encoded"]),
+            decode_nodes(enc["nodes_encoded"]),
         ).collect()
     }
     want = _oracle_features(fx)
@@ -73,13 +73,13 @@ def test_relation_features_match_oracle(spark, fx):
         assert got_coords == want_coords, f"relation {rid}"
 
 
-def test_way_features_classification(spark, fx):
+def test_way_features_classification(spark, fx, enc):
     from lazyosm_spark.operators.osm import decode_nodes, decode_ways, way_features
 
     wf = {
         r["osm_id"]: r["geom_type"]
         for r in way_features(
-            decode_ways(fx["ways_encoded"]), decode_nodes(fx["nodes_encoded"])
+            decode_ways(enc["ways_encoded"]), decode_nodes(enc["nodes_encoded"])
         ).collect()
     }
     for w in fx["ways"].collect():
@@ -90,10 +90,10 @@ def test_way_features_classification(spark, fx):
         assert wf[w["id"]] == want, w["id"]
 
 
-def test_node_features_only_tagged(spark, fx):
+def test_node_features_only_tagged(spark, enc):
     from lazyosm_spark.operators.osm import decode_nodes, node_features
 
-    nodes = decode_nodes(fx["nodes_encoded"])
+    nodes = decode_nodes(enc["nodes_encoded"])
     n_tagged = nodes.filter(F.size("tags") > 0).count()
     feats = node_features(nodes)
     assert feats.count() == n_tagged

@@ -24,7 +24,8 @@ _JOB_GROUPS = itertools.count()
 SF = "/root/testdata/sf0.001"
 TILE_POINTS_SHUFFLE_JOBS = 4
 GRID_KNN_HINTED_JOBS = 9
-RUN_STAGE_JOBS = (7, 10, 5)  # fresh, half-resumed, no-op
+RUN_STAGE_JOBS = (5, 6, 2)  # fresh, half-resumed, no-op
+READ_PBF_JOBS = 1
 
 
 def _delta(spark, fn) -> int:
@@ -173,11 +174,46 @@ def test_grid_knn_hinted_jobs_budget_and_no_residue(spark):
     assert n_persistent_rdds(spark) - base <= 1
 
 
+def test_read_pbf_parses_once_jobs_budget_and_no_residue(spark):
+    """One read_pbf call runs READ_PBF_JOBS jobs: the parse, which
+    materializes the block frame into the call's one result-backing
+    checkpoint.  all_features over its four-way use of the frames runs
+    neither the binaryFile scan nor the parse again, and the call
+    leaves CacheManager empty."""
+    import os
+
+    from lazyosm_spark.operators.osm import (
+        all_features, decode_nodes, decode_relations, decode_ways,
+    )
+    from lazyosm_spark.sources.fixtures import OSM_SHARD, fixtures_dir
+    from lazyosm_spark.sources.pbf import read_pbf
+
+    path = os.path.join(fixtures_dir("tiny"), OSM_SHARD)
+    spark.catalog.clearCache()
+    base = n_persistent_rdds(spark)
+    enc = {}
+    assert _jobs_in_call(spark, lambda: enc.update(read_pbf(spark, path))) == READ_PBF_JOBS
+    feats = all_features(
+        decode_nodes(enc["nodes_encoded"]),
+        decode_ways(enc["ways_encoded"]),
+        decode_relations(enc["relations_encoded"]),
+    )
+    feats.collect()
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert "binaryfile" not in plan.lower()
+    assert n_persistent_rdds(spark) - base <= 1
+    assert _cache_manager_empty(spark)
+
+
 def test_run_stage_jobs_budget(spark, tmp_path):
     """CheckpointedPipeline.run_stage on a 20k-row, 64-bucket stage runs
     RUN_STAGE_JOBS jobs fresh (half the buckets), resuming the other
-    half, and as a no-op re-run; the snapshot log records each commit's
-    whole-stage bucket and row totals."""
+    half, and as a no-op re-run: the lineage aggregation and the data
+    write, plus a listing job on each read-back of the 64-bucket stage
+    (Spark lists more than 32 partition dirs in parallel).  The lineage
+    commit and the read-back's schema run none.  The snapshot log
+    records each commit's whole-stage bucket and row totals."""
     import json
 
     from lazyosm_spark.plans.lineage import CheckpointedPipeline

@@ -58,10 +58,10 @@ def test_round_ref_semantics(spark):
         assert r["r"] == ro.round_ref(r["v"]), (r["v"], r["r"], ro.round_ref(r["v"]))
 
 
-def test_nodes_roundtrip_exact(spark, fx):
+def test_nodes_roundtrip_exact(spark, fx, enc):
     from lazyosm_spark.operators.osm import decode_nodes
 
-    decoded = decode_nodes(fx["nodes_encoded"])
+    decoded = decode_nodes(enc["nodes_encoded"])
     world = fx["nodes"]
     assert decoded.count() == world.count()
     assert (
@@ -75,18 +75,18 @@ def test_nodes_roundtrip_exact(spark, fx):
     assert a.exceptAll(b).count() == 0
 
 
-def test_ways_relations_roundtrip(spark, fx):
+def test_ways_relations_roundtrip(spark, fx, enc):
     from lazyosm_spark.operators.osm import decode_relations, decode_ways
 
     assert (
-        decode_ways(fx["ways_encoded"])
+        decode_ways(enc["ways_encoded"])
         .select("id", "refs")
         .exceptAll(fx["ways"].select("id", "refs"))
         .count()
         == 0
     )
     assert (
-        decode_relations(fx["relations_encoded"])
+        decode_relations(enc["relations_encoded"])
         .select("id", "memids")
         .exceptAll(fx["relations"].select("id", "memids"))
         .count()
@@ -94,12 +94,12 @@ def test_ways_relations_roundtrip(spark, fx):
     )
 
 
-def test_tagless_block_pruning_preserves_tagged(spark, fx):
+def test_tagless_block_pruning_preserves_tagged(spark, enc):
     from lazyosm_spark.operators.osm import decode_nodes
 
-    full = decode_nodes(fx["nodes_encoded"]).filter(F.size("tags") > 0).count()
+    full = decode_nodes(enc["nodes_encoded"]).filter(F.size("tags") > 0).count()
     pruned = (
-        decode_nodes(fx["nodes_encoded"], prune_tagless_blocks=True)
+        decode_nodes(enc["nodes_encoded"], prune_tagless_blocks=True)
         .filter(F.size("tags") > 0)
         .count()
     )

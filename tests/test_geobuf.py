@@ -25,7 +25,7 @@ def _canon_coords(coords, p=7, close_rings=False):
     return json.dumps(out)
 
 
-def test_geobuf_roundtrip_features(spark, fx):
+def test_geobuf_roundtrip_features(spark, enc):
     from lazyosm_spark.operators.osm import (
         all_features,
         decode_nodes,
@@ -39,9 +39,9 @@ def test_geobuf_roundtrip_features(spark, fx):
     )
 
     feats = all_features(
-        decode_nodes(fx["nodes_encoded"]),
-        decode_ways(fx["ways_encoded"]),
-        decode_relations(fx["relations_encoded"]),
+        decode_nodes(enc["nodes_encoded"]),
+        decode_ways(enc["ways_encoded"]),
+        decode_relations(enc["relations_encoded"]),
     )
     want = {
         r["osm_id"]: r
@@ -80,7 +80,7 @@ def test_geobuf_roundtrip_features(spark, fx):
     assert back == blob0
 
 
-def test_geobuf_geojson_content_parity(spark, fx):
+def test_geobuf_geojson_content_parity(spark, enc):
     """Decoded geobuf features carry the SAME content as the GeoJSON
     sink strings (parsed comparison: geometry/properties/id)."""
     from lazyosm_spark.operators.osm import (
@@ -93,9 +93,9 @@ def test_geobuf_geojson_content_parity(spark, fx):
     from lazyosm_spark.sources.geobuf import decode_feature_collection, geobuf_sink
 
     rf = relation_features(
-        decode_relations(fx["relations_encoded"]),
-        decode_ways(fx["ways_encoded"]),
-        decode_nodes(fx["nodes_encoded"]),
+        decode_relations(enc["relations_encoded"]),
+        decode_ways(enc["ways_encoded"]),
+        decode_nodes(enc["nodes_encoded"]),
     )
     gj = {
         r["osm_id"]: json.loads(r["geojson"])

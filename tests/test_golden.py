@@ -18,7 +18,7 @@ def golden_dir():
     return make("tiny")
 
 
-def test_golden_relation_features(spark, fx, golden_dir):
+def test_golden_relation_features(spark, enc, golden_dir):
     from lazyosm_spark.operators.osm import (
         decode_nodes,
         decode_relations,
@@ -30,9 +30,9 @@ def test_golden_relation_features(spark, fx, golden_dir):
     got = {
         r["osm_id"]: r
         for r in relation_features(
-            decode_relations(fx["relations_encoded"]),
-            decode_ways(fx["ways_encoded"]),
-            decode_nodes(fx["nodes_encoded"]),
+            decode_relations(enc["relations_encoded"]),
+            decode_ways(enc["ways_encoded"]),
+            decode_nodes(enc["nodes_encoded"]),
         ).collect()
     }
     assert set(got) == set(golden["osm_id"])

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import tempfile
 
 import numpy as np
@@ -202,8 +203,9 @@ def test_pbf_header_roundtrip_and_capability_check(spark):
         pbf.write_pbf_shard(
             bad, nodes=pdf, required_features=("OsmSchema-V0.6", "Sort.Type_then_ID")
         )
+        # read_pbf is eager: the call itself raises
         with pytest.raises(Exception, match="Sort.Type_then_ID"):
-            pbf.read_pbf(spark, bad)["nodes_encoded"].count()
+            pbf.read_pbf(spark, bad)
         # driver-side parse rejects identically (the reference's
         # fail-fast shape)
         with open(bad, "rb") as f:
@@ -251,13 +253,23 @@ def test_pbf_block_ids_unique_across_shards(spark):
     assert max(b["n_points"] for b in blocks) <= 50
 
 
+def test_read_pbf_glob_matching_nothing_raises(spark, tmp_path):
+    """A path or glob that matches no shard is an error naming it, not an
+    empty read."""
+    import pytest
+
+    for missing in (tmp_path / "*.osm.pbf", tmp_path / "absent.osm.pbf"):
+        with pytest.raises(ValueError, match=re.escape(str(missing))):
+            pbf.read_pbf(spark, str(missing))
+
+
 def test_stale_fixture_cache_is_rebuilt(spark, tmp_path, monkeypatch):
     """A fixture dir of the parquet block layout (``_DONE`` beside
     ``nodes_encoded.parquet``, no shard) is rebuilt, not read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from lazyosm_spark.sources.fixtures import OSM_SHARD, load_fixtures
+    from lazyosm_spark.sources.fixtures import OSM_SHARD, fixture_pbf
 
     stale = tmp_path / "tiny"
     stale.mkdir()
@@ -265,8 +277,8 @@ def test_stale_fixture_cache_is_rebuilt(spark, tmp_path, monkeypatch):
     pq.write_table(pa.table({"block_id": [0]}), stale / "nodes_encoded.parquet")
     monkeypatch.setenv("LAZYOSM_FIXTURES", str(tmp_path))
 
-    fx = load_fixtures(spark, "tiny")
+    enc = fixture_pbf(spark, "tiny")
     assert (stale / OSM_SHARD).exists()
     assert not (stale / "nodes_encoded.parquet").exists()
-    assert "granularity" in fx["nodes_encoded"].columns
-    assert fx["nodes_encoded"].count() > 1
+    assert "granularity" in enc["nodes_encoded"].columns
+    assert enc["nodes_encoded"].count() > 1
