@@ -112,17 +112,11 @@ class CheckpointedPipeline:
         self.n_buckets = n_buckets
         os.makedirs(root, exist_ok=True)
 
-    def _recorded(self, stage: str) -> DataFrame | None:
-        """The stage's committed lineage table, or None before its first
-        commit (an existence check, not a failed read)."""
-        if not _lineage_files(self.root, stage):
-            return None
-        return self.spark.read.parquet(lineage_path(self.root, stage))
-
     def completed_buckets(self, stage: str) -> DataFrame:
-        recorded = self._recorded(stage)
-        if recorded is None:
+        # before the stage's first commit there is no table to read
+        if not _lineage_files(self.root, stage):
             return self.spark.range(0).select(F.col("id").cast("int").alias("bucket"))
+        recorded = self.spark.read.parquet(lineage_path(self.root, stage))
         return recorded.select("bucket").distinct()
 
     def run_stage(
